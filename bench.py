@@ -17,10 +17,9 @@ import re
 import sys
 import time
 
-from spark_cherry_shuffle_service_spark.functions.ranking import release_persisted
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
 from spark_cherry_shuffle_service_spark.session import get_spark
-from spark_cherry_shuffle_service_spark.sources.catalog import write_noop
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted, write_noop
 
 # Headline set: the relational spine + shuffle-heavy workloads + the
 # north-star extension operators. A representative slice of SURVEY.md §2.
@@ -398,17 +397,11 @@ def main() -> None:
         }
         flag = " [retimed]" if retimed else ""
         print(f"  {name}: {timings[name]:.3f}s{flag}", file=sys.stderr)
-        # Ranking builds (functions/ranking.py) persist their input for
-        # the build's duration; release after the query's runs complete so
-        # the bench session carries no abandoned blocks (no-op for queries
-        # that don't route through with_global_rank).
+        # Builders persist only through catalog.pin. Release once the
+        # query's runs complete: its warm runs re-hit its own pinned
+        # frames, and no query inherits another query's cached blocks, so
+        # runs[0] pays the query's full cold cost.
         release_persisted()
-        # Deliberately NO spark.catalog.clearCache() here: an A/B run showed
-        # per-query cache clearing adds ~60% total wall-clock (agg_cube
-        # 3.0 s -> 13-22 s) via block-eviction churn against the live
-        # session. Accumulated cached blocks are bounded by the 16g heap
-        # (session.py); per-query numbers therefore share warm caches
-        # across queries, same methodology as the round-1 baseline.
 
     total = round(sum(timings.values()), 3)
     # Per-query baseline verdicts, computed in-run so the artifact is

@@ -27,6 +27,7 @@ from spark_cherry_shuffle_service_spark.session import get_spark
 from spark_cherry_shuffle_service_spark.sources.catalog import (
     DEFAULT_SF_DIR,
     register_views,
+    release_persisted,
     write_noop,
 )
 
@@ -185,6 +186,7 @@ def cmd_bench(args) -> int:
             t0 = time.perf_counter()
             write_noop(df)
             runs.append(round(time.perf_counter() - t0, 3))
+        release_persisted()  # once per query, after its runs (bench.py)
         s = sorted(runs)
         mid = s[len(s) // 2] if len(s) % 2 else (s[len(s) // 2 - 1] + s[len(s) // 2]) / 2
         timings[name] = round(mid, 3)

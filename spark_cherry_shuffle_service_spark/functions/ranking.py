@@ -62,27 +62,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# release_persisted is re-exported: harnesses import it from here.
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, release_persisted  # noqa: F401
+
 OrderSpec = tuple[str, str]  # (column name, "asc" | "desc")
-
-# Frames persisted by with_global_rank(s) builds, awaiting release. The
-# persist is only needed DURING the build (it lets the boundary-sample and
-# bucket-counts jobs share one materialization with the final ranked
-# output); correctness never depends on it. Harnesses that materialize the
-# ranked result (compare, bench) call release_persisted() after the final
-# action so long sessions don't accumulate abandoned cache blocks
-# (ADVICE r6 / VERDICT r6 item 4; policy in SCALE.md §persist).
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> int:
-    """Unpersist every frame cached by prior ranking builds; returns how
-    many were released. Safe at any time — callers invoke it after the
-    final action on the ranked output; a later re-action would simply
-    recompute the upstream pipeline without the cache."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 def _sort_exprs(order: list[OrderSpec]) -> list[Column]:
@@ -182,7 +165,6 @@ def with_global_rank(
     n_name: str | None = None,
     num_buckets: int | None = None,
     samples_per_bucket: int = 200,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Add a global 1-based row_number over ``order`` without a
     partition-less window.
@@ -195,20 +177,14 @@ def with_global_rank(
                  inclusive global running sums.
     n_name       if set, also emit the total row count under this name
                  (needed by ntile_expr).
-    persist_input  the input feeds THREE consumers (boundary sample,
-                 bucket counts, ranked output); the default persist is
-                 materialized by the sample job so the other two read
-                 the cache instead of recomputing the upstream pipeline.
-                 The frame is tracked in _PERSISTED — harnesses call
-                 release_persisted() after the final action (policy in
-                 SCALE.md §persist). Pass False when the caller already
-                 persisted.
+    The input feeds THREE consumers (boundary sample, bucket counts,
+    ranked output), so it is pinned (catalog.pin): the sample job
+    materializes it and the other two read the cache instead of
+    recomputing the upstream pipeline.
     """
     spark = df.sparkSession
     n_buck = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if persist_input:
-        df = df.persist()
-        _PERSISTED.append(df)
+    df = pin(df)
     bounds = _collect_boundaries(df, order, n_buck, samples_per_bucket)
 
     bucketed = df.withColumn("_gw_b", _bucket_expr(order, bounds))
@@ -256,7 +232,6 @@ def with_global_ranks(
     n_name: str | None = None,
     num_buckets: int | None = None,
     samples_per_bucket: int = 200,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Multiple global ranks over the SAME frame with ONE sample job and
     ONE counts job (``with_global_rank`` pays one pair per rank —
@@ -273,9 +248,7 @@ def with_global_ranks(
     """
     spark = df.sparkSession
     n_buck = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if persist_input:
-        df = df.persist()
-        _PERSISTED.append(df)
+    df = pin(df)
     names: list[str] = []
     for _, order in ranks:
         for c, _d in order:

@@ -44,14 +44,7 @@ from pyspark.sql import functions as F
 
 from spark_cherry_shuffle_service_spark.functions.text import tokens
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under this module's scope (catalog.scoped_persist):
-    persisting here releases other families' cached frames, bounding the
-    live cache across a long shared session. Same-family frames stay."""
-    return scoped_persist(df, "bpe")
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 
 _BPE_MERGES = 8
@@ -191,9 +184,8 @@ def _train(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, i
         words.groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.split(F.col("w"), "").alias("syms"), "cnt")
-        .transform(_pin)
+        .transform(pin)
     )
-    kept = [vocab]  # release only after the merge table is materialized
     merges: list[tuple[int, str, str, str, int]] = []
     for step_no in range(1, _BPE_MERGES + 1):
         top = (
@@ -208,10 +200,7 @@ def _train(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, i
             break
         left, right, pc = top[0]["l"], top[0]["r"], int(top[0]["pc"])
         merges.append((step_no, left, right, left + right, pc))
-        vocab = vocab.select(merge_pair(F.col("syms"), left, right).alias("syms"), "cnt").transform(_pin)
-        kept.append(vocab)
-    for df in kept:
-        df.unpersist()
+        vocab = vocab.select(merge_pair(F.col("syms"), left, right).alias("syms"), "cnt").transform(pin)
     _TRAIN_MEMO[memo_key] = merges
     return merges
 

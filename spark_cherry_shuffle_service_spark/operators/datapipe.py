@@ -29,14 +29,7 @@ from pyspark.sql import functions as F
 from spark_cherry_shuffle_service_spark.functions.aggregates import dsum
 from spark_cherry_shuffle_service_spark.plans.oracle import dsum_sql
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under this module's scope (catalog.scoped_persist):
-    persisting here releases other families' cached frames, bounding the
-    live cache across a long shared session. Same-family frames stay."""
-    return scoped_persist(df, "datapipe")
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 
 # md5(doc_id) → first 8 hex chars → BIGINT: the shared deterministic
@@ -331,7 +324,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", "source", shingles(F.col("text"), _DECON_W).alias("gr"))
-        .transform(_pin)  # eval grams + corpus probe both read it
+        .transform(pin)  # eval grams + corpus probe both read it
     )
     eval_g = (
         docs.filter(F.col("doc_id") < _EVAL_N)

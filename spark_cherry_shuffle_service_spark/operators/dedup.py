@@ -35,17 +35,7 @@ from spark_cherry_shuffle_service_spark.functions.text import (
     tokens,
 )
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under the shared "lsh" scope (catalog.scoped_persist):
-    dedup and similarity share the LSH machinery (dedup_embedding_cosine
-    pins `emb` then calls similarity.lsh_candidates, which pins `banded`)
-    so they MUST share one family — split families would unpersist a
-    query's own frames mid-build. Persisting here still releases every
-    other family's cached frames, bounding the live cache."""
-    return scoped_persist(df, "lsh")
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 
 _SQL_TOKS = "string_split_regex(trim(text), ' +')"
@@ -147,7 +137,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", "source", shingles3(F.col("text")).alias("sh"))
-        .transform(_pin)  # feeds prefix explode + both verify sides
+        .transform(pin)  # feeds prefix explode + both verify sides
     )
     return _jaccard_verified_pairs(docs)
 
@@ -216,7 +206,7 @@ def _minhash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Measured at sf0.1: persist 2.2 s vs recompute 2.6 s steady-state;
         # the gap widens with corpus size (3× recompute) until the cache
         # outgrows memory.
-        .transform(_pin)
+        .transform(pin)
     )
     # Signature per doc via the nested-HOF kernel (the streaming/audit path
     # and the oracle's own form): min(string) is not hash-aggregable, so the
@@ -340,7 +330,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each union branch recomputes signature+banding+verify beyond the
     # shingle cache (fresh-process 9.6 s → 8.5 s at sf0.1; 6.0 s warm in
     # the bench where the shared minhash subtree is already cached).
-    pairs = _minhash_pair_frame(spark, sf_dir).transform(_pin)
+    pairs = _minhash_pair_frame(spark, sf_dir).transform(pin)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
@@ -353,7 +343,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computes the identical round-k labels.
     edges_plus = edges.unionByName(
         nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).transform(_pin)  # re-joined every propagation round
+    ).transform(pin)  # re-joined every propagation round
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(_CLUSTER_ROUNDS):
         labels = (
@@ -361,7 +351,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("src")
             .agg(F.min("label").alias("label"))
             .select(F.col("src").alias("node"), "label")
-            .transform(_pin)  # per-round persist: avoids O(k²) recompute (graph.py note)
+            .transform(pin)  # per-round persist: avoids O(k²) recompute (graph.py note)
         )
     w = Window.partitionBy("label")
     return labels.select(
@@ -471,7 +461,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-        .transform(_pin)
+        .transform(pin)
     )
     cands = lsh_candidates(emb, "keep_id", "dup_id")
     a = emb.select(
@@ -534,7 +524,7 @@ def dedup_crossmodal(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", "source", shingles3(F.col("text")).alias("sh"))
-        .transform(_pin)
+        .transform(pin)
     )
     # Lexical candidates via the same recall-complete prefix-filter join
     # as dedup_ngram_jaccard (no per-source all-pairs product).
@@ -633,7 +623,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", shingles3(F.col("text")).alias("sh"))
-        .transform(_pin)  # feeds probe prefix, corpus index, and both verify sides
+        .transform(pin)  # feeds probe prefix, corpus index, and both verify sides
     )
     probe = docs.filter(F.col("doc_id") % 10 == 0)
     pref = probe.select(
@@ -713,7 +703,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .repartition(par, "doc_id")
         .select("doc_id", shingles3(F.col("text")).alias("sh"))
-        .transform(_pin)  # feeds signature build + both verify sides
+        .transform(pin)  # feeds signature build + both verify sides
     )
     # Same nested-HOF signature move as _minhash_pair_frame (no shuffle, no
     # SortAggregate; size guard keeps explode-form semantics for empty sh).
@@ -846,7 +836,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("_m", "doc_id")
         .limit(_AUDIT_N)
         .select("doc_id", shingles3(F.col("text")).alias("sh"))
-        .transform(_pin)  # feeds truth (both sides), sig
+        .transform(pin)  # feeds truth (both sides), sig
     )
     a, b = samp.alias("a"), samp.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
@@ -855,7 +845,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
         .filter(inter.cast("double") / union >= _MH_TAU)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .transform(_pin)  # feeds the hits join + its own count
+        .transform(pin)  # feeds the hits join + its own count
     )
     sig = samp.select("doc_id", minhash_signature(F.col("sh"), _MH_N).alias("sig"))
     banded = sig.select(
@@ -882,7 +872,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
         .distinct()
-        .transform(_pin)  # feeds the hits join + its own count
+        .transform(pin)  # feeds the hits join + its own count
     )
     hits = truth.join(cands, ["doc_a", "doc_b"])
     m = (
@@ -1122,7 +1112,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", "source", shingles3(F.col("text")).alias("sh"))
-        .transform(_pin)
+        .transform(pin)
     )
     # _jaccard_verified_pairs keeps pairs with j >= _JACC_TAU (0.3) via
     # the recall-complete prefix filter; the higher thresholds are

@@ -19,15 +19,7 @@ from pyspark.sql import functions as F
 from spark_cherry_shuffle_service_spark.functions.aggregates import davg, dsum
 from spark_cherry_shuffle_service_spark.plans.oracle import davg_sql, dsum_sql
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under this module's scope (catalog.scoped_persist):
-    persisting here releases other families' cached frames, bounding the
-    live cache across a long shared session. Same-family frames stay."""
-    return scoped_persist(df, "events")
-
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 
 # ---------------------------------------------------------------------------
@@ -883,7 +875,7 @@ def events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "events")
         .select(F.to_date("ts").alias("d"), "user_id")
         .distinct()
-        .transform(_pin)  # feeds the day spine, the fan-out, and dau1
+        .transform(pin)  # feeds the day spine, the fan-out, and dau1
     )
     days = ev.select("d").distinct()
     contrib = ev.select(

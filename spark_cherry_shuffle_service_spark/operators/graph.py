@@ -28,14 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under this module's scope (catalog.scoped_persist):
-    persisting here releases other families' cached frames, bounding the
-    live cache across a long shared session. Same-family frames stay."""
-    return scoped_persist(df, "graph")
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 
 def _sym_edges(pairs: DataFrame, *extra: str) -> DataFrame:
@@ -191,7 +184,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges_deg = (
         edges.repartition(par, "src")
         .withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .transform(_pin)
+        .transform(pin)
     )
     # Fixed-point micro-rank units (see _oracle): integer floor-division
     # contributions — tie-free, float-free, bit-identical on any engine.
@@ -212,7 +205,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Persist every round: each round's broadcast runs as its OWN job,
         # and jobs don't share shuffle outputs across separate actions —
         # without the cache, round k recomputes rounds 1..k-1 (O(k²) work).
-        ).transform(_pin)
+        ).transform(pin)
     return ranks.select("node", F.round(F.col("rank") / 1_000_000.0, 6).alias("pagerank"))
 
 
@@ -342,7 +335,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join (node == src) aligns with that shuffle's output. One exchange
     # per round beats even the old forced-broadcast plan, and the shape
     # is exactly what src/dst-bucketed edge tables give at 100 TB.
-    edges = _sym_edges(pairs).repartition(par, "dst").transform(_pin)
+    edges = _sym_edges(pairs).repartition(par, "dst").transform(pin)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -359,7 +352,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             labels.join(neighbor_min, labels.node == neighbor_min.src)
             .select("node", F.least(F.col("label"), F.col("nmin")).alias("label"))
             # per-round persist: see pagerank note — avoids O(k²) recompute
-            .transform(_pin)
+            .transform(pin)
         )
     return labels.groupBy(F.col("label").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes"), F.min("node").alias("min_node")
@@ -434,7 +427,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Three roles of the same edge table; persist so the build happens once
     # (same reuse rationale as the PageRank edge table).
-    pairs = pairs.transform(_pin)
+    pairs = pairs.transform(pin)
     e1 = pairs.select(F.col("u").alias("t_a"), F.col("v").alias("t_b"))
     e2 = pairs.select(F.col("u").alias("s_b"), F.col("v").alias("t_c"))
     e3 = pairs.select(F.col("u").alias("w_a"), F.col("v").alias("w_c"))
@@ -519,13 +512,13 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = _sym_edges(pairs).repartition(par, "src").transform(_pin)
+    edges = _sym_edges(pairs).repartition(par, "src").transform(pin)
     sup = table(spark, sf_dir, "supplier")
     frontier = (
         sup.filter(F.col("s_nationkey") == 0)
         .select((2 * F.col("s_suppkey")).alias("node"))
         .distinct()
-        .transform(_pin)
+        .transform(pin)
     )
     visited = frontier
     counts = [
@@ -539,7 +532,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        frontier = nxt.join(visited, "node", "left_anti").transform(_pin)
+        frontier = nxt.join(visited, "node", "left_anti").transform(pin)
         visited = visited.unionByName(frontier)
         counts.append(
             frontier.agg(F.count(F.lit(1)).alias("n_nodes")).select(
@@ -724,20 +717,20 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = _sym_edges(pairs).repartition(par, "src").transform(_pin)
+    edges = _sym_edges(pairs).repartition(par, "src").transform(pin)
     for _ in range(_KCORE_ROUNDS):
         alive = (
             edges.groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= _KCORE_K)
             .select("src")
-            .transform(_pin)  # probed twice below (src- and dst-side semi-joins)
+            .transform(pin)  # probed twice below (src- and dst-side semi-joins)
         )
         edges = (
             edges.join(alive, "src", "left_semi")
             .join(alive.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .repartition(par, "src")
-            .transform(_pin)  # per-round persist: see pagerank note (O(k^2) otherwise)
+            .transform(pin)  # per-round persist: see pagerank note (O(k^2) otherwise)
         )
     return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
@@ -859,7 +852,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
     )
-    edges = _sym_edges(edges_one_way, "w").repartition(par, "src").transform(_pin)
+    edges = _sym_edges(edges_one_way, "w").repartition(par, "src").transform(pin)
     dist = (
         table(spark, sf_dir, "supplier")
         .filter(F.col("s_nationkey") == 0)
@@ -876,7 +869,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
             # per-round persist: see pagerank note (O(k^2) otherwise)
-            .transform(_pin)
+            .transform(pin)
         )
     return dist
 
@@ -1001,7 +994,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         _sym_edges(pairs)
         .repartition(par, "dst")  # the per-round join probes on dst (CC note)
-        .transform(_pin)
+        .transform(pin)
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -1020,7 +1013,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select(F.col("nd").alias("node"), "label")
             # per-round persist: see pagerank note (O(k^2) otherwise)
-            .transform(_pin)
+            .transform(pin)
         )
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("n_nodes"), F.min("node").alias("min_node")

@@ -38,14 +38,7 @@ from pyspark.sql import functions as F
 
 from spark_cherry_shuffle_service_spark.plans.oracle import dsum_sql
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under this module's scope (catalog.scoped_persist):
-    persisting here releases other families' cached frames, bounding the
-    live cache across a long shared session. Same-family frames stay."""
-    return scoped_persist(df, "pipeline_ml")
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 
 # ---------------------------------------------------------------------------
@@ -243,9 +236,8 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("c")))
         .filter(F.col("d") <= _CN_DEGCAP)
         .select("s", "c")
-        # Deliberately not unpersisted (graph_* precedent, BASELINE.md):
-        # warm bench re-hits re-match this plan; blocks are LRU-bounded.
-        .transform(_pin)
+        # Pinned until the harness's release_persisted() (SCALE.md §persist).
+        .transform(pin)
     )
     sdeg = kept.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("d"))
     a, b = kept.alias("a"), kept.alias("b")
@@ -544,9 +536,8 @@ def graph_jaccard_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("c")))
         .filter(F.col("d") <= _CN_DEGCAP)
         .select("s", "c")
-        # Deliberately not unpersisted (graph_* precedent, BASELINE.md):
-        # warm bench re-hits re-match this plan; blocks are LRU-bounded.
-        .transform(_pin)
+        # Pinned until the harness's release_persisted() (SCALE.md §persist).
+        .transform(pin)
     )
     sdeg = kept.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("d"))
     a, b = kept.alias("a"), kept.alias("b")

@@ -24,7 +24,7 @@ from spark_cherry_shuffle_service_spark.functions.vectors import (
 )
 from spark_cherry_shuffle_service_spark.plans.oracle import dsum_sql
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, table
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
 _SQL_DOT_AB = (
     "list_reduce(list_prepend(0.0, list_transform(list_zip({a}, {b}),"
@@ -130,10 +130,8 @@ def lsh_candidates(emb: DataFrame, a_name: str, b_name: str) -> DataFrame:
     banded = parts[0]
     for part in parts[1:]:
         banded = banded.unionByName(part)
-    # persist: probed twice by the self-join below, and Spark's cacheManager
-    # plan-matching shares this across the similarity_pairs /
-    # dedup_embedding_cosine twins within a session (banding computed once)
-    banded = banded.transform(_pin)
+    # pin: probed twice by the self-join below (banding computed once)
+    banded = banded.transform(pin)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -181,7 +179,7 @@ def similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-        .transform(_pin)  # feeds banding + both verify sides
+        .transform(pin)  # feeds banding + both verify sides
     )
     cands = lsh_candidates(emb, "vec_a", "vec_b")
     a = emb.select(
@@ -587,7 +585,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         raw.repartition(par)  # single-file fixture → parallelize the dot math
         .select("vec_id", "embedding", dot(F.col("embedding"), F.col("embedding")).alias("vv"))
-        .transform(_pin)  # scanned by both assignment passes
+        .transform(pin)  # scanned by both assignment passes
     )
     c0 = _centroids_one_row(  # K rows, K fixed — SF-invariant per broadcast policy
         raw.filter(F.col("vec_id") < _KM_K).select(
@@ -741,7 +739,7 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-        .transform(_pin)
+        .transform(pin)
     )
     cands = lsh_candidates(emb, "vec_a", "vec_b")
     # Score each candidate pair ONCE, then symmetrize the scored rows with a
@@ -1162,7 +1160,7 @@ def similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-        .transform(_pin)  # feeds cell assignment, PQ codes, and the query table
+        .transform(pin)  # feeds cell assignment, PQ codes, and the query table
     )
     cents = emb.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cent_id"),
@@ -1412,7 +1410,7 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-        .transform(_pin)  # feeds centroid pick, assignment, truth corpus
+        .transform(pin)  # feeds centroid pick, assignment, truth corpus
     )
     cents = emb.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
@@ -1556,7 +1554,7 @@ def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-        .transform(_pin)  # centroid pick + assignment + truth corpus
+        .transform(pin)  # centroid pick + assignment + truth corpus
     )
     cents = emb.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
@@ -1850,17 +1848,6 @@ def similarity_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RERANK_TOPK = 2
 
 from spark_cherry_shuffle_service_spark.plans.registry import REGISTRY as _REG
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under the shared "lsh" scope (catalog.scoped_persist):
-    dedup and similarity share the LSH machinery (dedup_embedding_cosine
-    pins `emb` then calls similarity.lsh_candidates, which pins `banded`)
-    so they MUST share one family — split families would unpersist a
-    query's own frames mid-build. Persisting here still releases every
-    other family's cached frames, bounding the live cache."""
-    return scoped_persist(df, "lsh")
-
 
 
 @query(

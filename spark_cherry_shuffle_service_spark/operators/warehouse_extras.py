@@ -49,15 +49,7 @@ from spark_cherry_shuffle_service_spark.functions.aggregates import dec_to_doubl
 from spark_cherry_shuffle_service_spark.functions.ranking import ntile_expr, with_global_rank
 from spark_cherry_shuffle_service_spark.plans.oracle import dsum_sql
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import scoped_persist, spread, table
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """persist() under this module's scope (catalog.scoped_persist):
-    persisting here releases other families' cached frames, bounding the
-    live cache across a long shared session. Same-family frames stay."""
-    return scoped_persist(df, "warehouse")
-
+from spark_cherry_shuffle_service_spark.sources.catalog import pin, spread, table
 
 
 # ---------------------------------------------------------------------------
@@ -293,7 +285,7 @@ def orders_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("kv")
     ).select(F.col("kv.ka").alias("ka"), F.col("kv.kb").alias("kb"))
-    counts = kv.groupBy("ka", "kb").agg(F.count("*").alias("c")).transform(_pin)
+    counts = kv.groupBy("ka", "kb").agg(F.count("*").alias("c")).transform(pin)
     # persist: ≤ 326 rows at any SF (bounded, unlike the r11 fact-row
     # persist this replaces); read by the three broadcast branches below.
     tot = counts.filter(F.col("ka").isNull()).select(F.col("c").alias("n"))

@@ -19,8 +19,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_cherry_shuffle_service_spark.functions.ranking import release_persisted
-from spark_cherry_shuffle_service_spark.sources.catalog import TABLES
+from spark_cherry_shuffle_service_spark.sources.catalog import TABLES, release_persisted
 
 
 def _norm_cell(v: Any) -> Any:
@@ -195,9 +194,9 @@ def compare_queries(
         except Exception as ex:  # noqa: BLE001
             results[name] = f"ERROR: {str(ex)[:200]}"
         finally:
-            # Ranking builds persist their input for the duration of the
-            # build; release after the action so a full compare run ends
-            # with zero net-new cache blocks (VERDICT r6 item 4).
+            # Release the frames the build pinned (catalog.pin) after the
+            # query's final action, so a full compare run ends with zero
+            # net-new cache blocks.
             release_persisted()
             print(
                 f"  [compare] {name}: {results.get(name, '?')} "

@@ -78,9 +78,8 @@ def measure_queries(
     stages' byte metrics to it. Stages SKIPPED because a persisted or
     reused exchange served them report zero bytes — which is the point:
     the artifact shows what each query actually paid."""
-    from spark_cherry_shuffle_service_spark.functions.ranking import release_persisted
     from spark_cherry_shuffle_service_spark.plans.registry import all_specs
-    from spark_cherry_shuffle_service_spark.sources.catalog import write_noop
+    from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted, write_noop
 
     specs = all_specs()
     base = _api_base(spark)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import weakref
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,11 +44,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: driver time (py4j + relation resolution + footer schema inference), and
 #: builders re-read the same fixture tables on every query construction —
 #: measured at ~25% of the headline bench's wall clock (OPTIMIZATION_r12.md
-#: item 4). DataFrames are immutable plans, so reusing one per
-#: (session, resolved path, file mtime) is pure metadata caching — every
-#: action still computes from the parquet input; a regenerated fixture
-#: (new mtime) or a new session misses the memo. Sessions are held weakly
-#: so a stopped session's plans are collectable.
+#: item 4). DataFrames are immutable plans, so reusing one is pure metadata
+#: caching — every action still computes from the parquet input. One entry
+#: per (session, resolved path) holds (file mtime, plan); a regenerated
+#: fixture (new mtime) replaces its entry, so the memo never outgrows the
+#: table set. Sessions are held weakly so a stopped session's plans are
+#: collectable.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
@@ -62,17 +64,16 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
-    cache: dict | None
     try:
-        key = (os.path.realpath(path), os.path.getmtime(path))
+        real, mtime = os.path.realpath(path), os.path.getmtime(path)
         cache = _TABLE_MEMO.setdefault(spark, {})
     except (OSError, TypeError):
-        key, cache = None, None  # unreadable path: raise below, never cache
-    if cache is not None and key in cache:
-        return cache[key]
+        return _read_table(spark, sf_dir, name)  # unreadable path raises there; never cached
+    hit = cache.get(real)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
     df = _read_table(spark, sf_dir, name)
-    if cache is not None and key is not None:
-        cache[key] = df
+    cache[real] = (mtime, df)
     return df
 
 
@@ -168,32 +169,35 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
 #: spread()'s probe + lazy result, memoized per source DataFrame object.
 _SPREAD_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
 
-#: live persisted frames, keyed by family tag (VERDICT r11 item 6).
-_PERSIST_SCOPES: dict[str, list[DataFrame]] = {}
+#: Per-session pinned frames, unpersisted only by release_persisted().
+_PINNED: "weakref.WeakKeyDictionary[SparkSession, list]" = weakref.WeakKeyDictionary()
 
 
-def scoped_persist(df: DataFrame, family: str) -> DataFrame:
-    """`persist()` with cross-family unpersist discipline.
+def pin(df: DataFrame) -> DataFrame:
+    """`persist()` a builder intermediate for the rest of the query.
 
-    A builder can never unpersist the frames its returned (lazy) plan still
-    references, so across a long shared session — the 140-query bench, the
-    grading driver — persisted frames accumulate without bound (the r11
-    LSH-family warm-cache drift symptom). Scoping bounds the live set
-    instead of leaking it: persisting a frame for family X first
-    unpersists every frame previously registered by OTHER families.
-    Same-family frames stay live (iterative per-round persists, shared
-    subtrees like the minhash pair frame, warm re-runs of one query).
-    Unpersisting is always correctness-safe — a dropped cache entry simply
-    recomputes from the parquet source.
+    The one persist entry point for builders (SCALE.md §persist). A
+    builder returns a LAZY plan that still references what it pinned, so
+    nothing unpersists during a build: the frame stays cached until the
+    harness calls release_persisted() after the query's final action.
     """
-    for fam in [f for f in _PERSIST_SCOPES if f != family]:
-        for old in _PERSIST_SCOPES.pop(fam):
-            try:
-                old.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — stopped session, already gone
-                pass
-    _PERSIST_SCOPES.setdefault(family, []).append(df)
+    _PINNED.setdefault(df.sparkSession, []).append(df)
     return df.persist()
+
+
+def release_persisted() -> int:
+    """Unpersist every frame pinned in any session; returns how many.
+    Harnesses call it once per query, after the final action. A stopped
+    session's frames are dropped from the registry all the same."""
+    n = 0
+    for spark in list(_PINNED):
+        for df in _PINNED.pop(spark, []):
+            n += 1
+            try:
+                df.unpersist()
+            except Py4JError:  # stopped session: its blocks are already gone
+                pass
+    return n
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

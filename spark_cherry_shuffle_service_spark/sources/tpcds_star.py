@@ -1486,8 +1486,9 @@ def gen_web_returns(base: DataFrame) -> DataFrame:
 #: same convention as bpe.py's _TRAIN_MEMO.
 _STAR_MEMO: dict[tuple[str, float], dict] = {}
 
-#: Per-session star-table plan memo, keyed (star path, manifest mtime,
-#: table) — the register_star_views analogue of catalog._TABLE_MEMO.
+#: Per-session star-table plan memo: (star path, table) -> (manifest
+#: mtime, plan), replaced on a new mtime — the register_star_views
+#: analogue of catalog._TABLE_MEMO.
 _STAR_READ_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
@@ -1622,12 +1623,14 @@ def register_star_views(spark: SparkSession, sf_dir: str, force: bool = False) -
         cache = _STAR_READ_MEMO.setdefault(spark, {})
     except (OSError, TypeError):
         mtime, cache = None, None
+    real = os.path.realpath(out)
     for name in TPCDS_TABLES:
-        key = (os.path.realpath(out), mtime, name)
-        df = cache.get(key) if cache is not None else None
-        if df is None:
+        hit = cache.get((real, name)) if cache is not None else None
+        if hit is not None and hit[0] == mtime:
+            df = hit[1]
+        else:
             df = spark.read.parquet(os.path.join(out, f"{name}.parquet"))
-            if cache is not None and mtime is not None:
-                cache[key] = df
+            if cache is not None:
+                cache[(real, name)] = (mtime, df)
         ensure_view(spark, name, df, "star")
     return out

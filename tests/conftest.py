@@ -4,7 +4,7 @@ import duckdb
 import pytest
 
 from spark_cherry_shuffle_service_spark.session import get_spark
-from spark_cherry_shuffle_service_spark.sources.catalog import TABLES
+from spark_cherry_shuffle_service_spark.sources.catalog import TABLES, release_persisted
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -104,6 +104,15 @@ def pytest_collection_modifyitems(config, items):
                 item.add_marker(pytest.mark.quick)
             else:
                 item.add_marker(pytest.mark.full)
+
+
+@pytest.fixture(autouse=True)
+def _release_pinned_frames():
+    """Release what each test's builds pinned (catalog.pin), as the
+    harnesses do once per query. No build unpersists another build's
+    frames, so without this the shared session's cache grows per test."""
+    yield
+    release_persisted()
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,7 @@ defining invariant."""
 from __future__ import annotations
 
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 from tests.conftest import SF_SMOKE
 
 SPECS = all_specs()
@@ -30,6 +31,7 @@ def test_behavioral_ops_are_parallelism_invariant(spark):
             for n in NEW_OPS:
                 rows = sorted(map(repr, SPECS[n].builder(spark, SF_SMOKE).collect()))
                 results.setdefault(n, []).append(rows)
+                release_persisted()
         for n, (a, b) in results.items():
             assert a == b, f"{n} differs between 1 and 32 shuffle partitions"
     finally:

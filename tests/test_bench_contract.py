@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from bench import HEADLINE
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 from tests.conftest import SF_SMOKE
 
 
@@ -27,6 +28,7 @@ def test_every_headline_query_builds(spark):
             assert len(df.schema.fields) > 0
         except Exception as exc:  # noqa: BLE001 — report all, not first
             failed[name] = f"{type(exc).__name__}: {exc}"[:200]
+        release_persisted()
     assert not failed, f"{len(failed)} HEADLINE queries fail to build: {failed}"
 
 

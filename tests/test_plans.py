@@ -15,6 +15,7 @@ from spark_cherry_shuffle_service_spark.plans.explain import (
     uses_python_eval,
 )
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 from tests.conftest import SF_SMOKE
 
 SPECS = all_specs()
@@ -560,6 +561,7 @@ def test_global_rank_queries_have_no_partitionless_window(spark):
         df = SPECS[name].builder(spark, SF_SMOKE)
         assert partitionless_windows(df) == 0, name
         assert count_ops(df, "Window") >= 1, name  # decomposed, not windowless
+        release_persisted()
 
 
 def test_global_rank_helper_matches_single_reducer_window(spark):
@@ -683,6 +685,7 @@ def test_global_windows_only_on_sf_invariant_grains(spark):
     offenders = {}
     for name, spec in SPECS.items():
         n = partitionless_windows(spec.builder(spark, SF_SMOKE))
+        release_persisted()
         if n and name not in bounded_grain_whitelist:
             offenders[name] = n
     assert not offenders, offenders
@@ -793,28 +796,54 @@ def test_global_rank_buckets_stay_balanced_under_skew(spark):
     assert ratio < 2.0, (ratio, sorted(sizes)[-5:])
 
 
-def test_ranking_persist_released(spark):
-    """VERDICT r6 item 4: a build through with_global_rank(s) persists its
-    input for the build's duration; after the final action +
-    release_persisted() (which the compare harness and bench.py call
-    per-query) the session must carry ZERO net-new persisted frames.
-    Asserted for all three ranking-routed queries via the JVM-side
-    persistent-RDD map."""
-    from spark_cherry_shuffle_service_spark.functions.ranking import release_persisted
-    from spark_cherry_shuffle_service_spark.sources.catalog import write_noop
+#: One query per former persist family (ranking, graph, lsh, pipeline_ml,
+#: events, datapipe, warehouse, bpe) plus the other two ranking-routed
+#: queries.
+_PIN_LIFECYCLE_QUERIES = (
+    "orders_rfm",
+    "customer_revenue_deciles",
+    "abc_classification",
+    "graph_pagerank",
+    "dedup_embedding_cosine",
+    "graph_common_neighbors",
+    "events_rolling_dau",
+    "corpus_decontaminate",
+    "orders_basket_lift",
+    "text_bpe_train",
+)
+
+
+@pytest.mark.parametrize("name", _PIN_LIFECYCLE_QUERIES)
+def test_ranking_persist_released(spark, name, monkeypatch):
+    """The single persist lifecycle (catalog.pin + release_persisted): a
+    build pins its reused intermediates, every pinned frame is still
+    persisted when the final action runs (nothing unpersists during a
+    build — the dedup/similarity self-thrash class), and one
+    release_persisted() after the action (as compare/bench call it per
+    query) returns the session to its baseline persistent-RDD count with
+    an empty registry."""
+    from pyspark import StorageLevel
+
+    from spark_cherry_shuffle_service_spark.operators import bpe
+    from spark_cherry_shuffle_service_spark.sources import catalog
 
     def n_persisted() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
+    # bpe memoizes its merge table per corpus; clear it so the build trains
+    # (and pins) even when an earlier test already trained on this corpus.
+    monkeypatch.setattr(bpe, "_TRAIN_MEMO", {})
     release_persisted()  # drain anything a prior test left behind
     before = n_persisted()
-    for name in ("orders_rfm", "customer_revenue_deciles", "abc_classification"):
-        df = SPECS[name].builder(spark, SF_SMOKE)
-        assert n_persisted() > before, f"{name}: build should persist its input"
-        write_noop(df)  # the final action, as in compare/bench
-        released = release_persisted()
-        assert released >= 1, name
-        assert n_persisted() == before, name
+    df = SPECS[name].builder(spark, SF_SMOKE)
+    pinned = list(catalog._PINNED.get(spark, []))
+    assert pinned, f"{name}: build should pin its reused intermediates"
+    catalog.write_noop(df)  # the final action, as in compare/bench
+    none = StorageLevel(False, False, False, False)
+    assert all(p.storageLevel != none for p in pinned), f"{name}: a pinned frame was unpersisted mid-query"
+    assert release_persisted() == len(pinned), name
+    assert not catalog._PINNED, name
+    assert n_persisted() == before, name
 
 
 def test_ranking_total_order_contract_enforced(spark):
@@ -825,7 +854,6 @@ def test_ranking_total_order_contract_enforced(spark):
     from pyspark.sql import functions as F
 
     from spark_cherry_shuffle_service_spark.functions.ranking import (
-        release_persisted,
         with_global_rank,
         with_global_ranks,
     )

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import duckdb
 
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 from tests.conftest import SF_SMOKE
 
 
@@ -94,14 +95,12 @@ def test_limited_queries_are_parallelism_invariant(spark):
     from tests.compare import spark_rows
 
     specs = all_specs()
-    limited = [
-        n
-        for n in sorted(specs)
-        if any(
-            op in formatted_plan(specs[n].builder(spark, SF_SMOKE))
-            for op in ("TakeOrderedAndProject", "GlobalLimit")
-        )
-    ]
+    limited = []
+    for n in sorted(specs):
+        plan = formatted_plan(specs[n].builder(spark, SF_SMOKE))
+        release_persisted()
+        if any(op in plan for op in ("TakeOrderedAndProject", "GlobalLimit")):
+            limited.append(n)
     assert len(limited) >= 8, f"limit sweep lost coverage: {limited}"
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -112,6 +111,7 @@ def test_limited_queries_are_parallelism_invariant(spark):
                 results.setdefault(n, []).append(
                     spark_rows(specs[n].builder(spark, SF_SMOKE))
                 )
+                release_persisted()
         for n, runs in results.items():
             assert runs[0] == runs[1] == runs[2], (
                 f"{n}: LIMIT result depends on parallelism — ambiguous ORDER BY"
@@ -150,6 +150,7 @@ def test_round3_ops_are_parallelism_invariant(spark):
                 df = specs[n].builder(spark, SF_SMOKE)
                 rows = sorted(map(repr, df.collect()))
                 results.setdefault(n, []).append(rows)
+                release_persisted()
         for n, (a, b) in results.items():
             assert a == b, f"{n} differs between 1 and 32 shuffle partitions"
     finally:
@@ -181,6 +182,7 @@ def test_round4_ops_are_parallelism_invariant(spark):
                 df = specs[n].builder(spark, SF_SMOKE)
                 rows = sorted(map(repr, df.collect()))
                 results.setdefault(n, []).append(rows)
+                release_persisted()
         for n, (a, b) in results.items():
             assert a == b, f"{n} differs between 1 and 32 shuffle partitions"
     finally:

@@ -14,193 +14,16 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
-import time
 
-from spark_cherry_shuffle_service_spark.plans.registry import all_specs
+from spark_cherry_shuffle_service_spark.plans.measure import (
+    HEADLINE,
+    calibration_probe,
+    measure_query,
+    warm_up,
+)
 from spark_cherry_shuffle_service_spark.session import get_spark
-from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted, write_noop
-
-# Headline set: the relational spine + shuffle-heavy workloads + the
-# north-star extension operators. A representative slice of SURVEY.md §2.
-HEADLINE = [
-    "pricing_summary",
-    "top_revenue",
-    "join_inner",
-    "join_theta",
-    "join_full",
-    "cumulative_compare",
-    "rollup_grouping",
-    "window_avg_dev",
-    "agg_distinct",
-    "synthetic_groupcount",
-    "skewed_groupcount",
-    "events_sessionize",
-    "text_token_count",
-    "text_fingerprint",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "similarity_topk",
-    "similarity_lsh_buckets",
-    "similarity_ivf",
-    "agg_cube",
-    "window_lead_lag",
-    "skewed_salted_groupcount",
-    "shipping_priority",
-    "local_supplier_volume",
-    "events_asof_join",
-    "graph_pagerank",
-    "text_wordcount",
-    "events_multi_rollup",
-    "orders_pivot",
-    "udaf_grouped_geomean",
-    "dedup_embedding_cosine",
-    "events_funnel",
-    "events_retention",
-    "events_sliding_window",
-    "window_distribution",
-    "udf_grouped_map_zscore",
-    "dedup_crossmodal",
-    "graph_connected_components",
-    # TPC-H spine completion (operators/tpch_suite.py): the heaviest of the
-    # Q2-Q22 analogs — multi-way join trees, EXISTS/NOT-EXISTS chains,
-    # correlated-avg decorrelation, disjunctive join predicates.
-    "volume_shipping",
-    "market_share",
-    "product_profit",
-    "returned_items",
-    "customer_distribution",
-    "large_volume_customers",
-    "discounted_revenue",
-    "waiting_suppliers",
-    # Training-data pipeline stages (operators/datapipe.py).
-    "dataset_split",
-    "pack_sequences",
-    "corpus_filter_funnel",
-    "kmeans_assign",
-    "skewed_salted_join",
-    # Round-2 additions: bucketed pair generation, temporal range join,
-    # full Lloyd iteration, decontamination, quantization, decimal-native
-    # money, verbatim SQL-text spine.
-    "similarity_pairs",
-    "dedup_ngram_jaccard",
-    "events_range_join",
-    "kmeans_lloyd",
-    "corpus_decontaminate",
-    "embedding_quantize",
-    "decimal_pricing",
-    "sql_text_q1",
-    # Round-2 second tranche: repetition/quality filters, BM25 + index,
-    # token-budget cut, near-dup clustering, exact percentiles, and the
-    # disjunctive-predicate SQL text.
-    "text_repetition",
-    "text_bm25",
-    "text_inverted_index",
-    "corpus_token_budget",
-    "dedup_cluster_canonical",
-    "agg_percentiles",
-    "sql_text_q19",
-    # Round-2 third tranche: unigram-LM surprisal scoring, temperature
-    # language mixing, RAG chunking, LSH k-NN graph.
-    "text_surprisal",
-    "corpus_temperature_sample",
-    "text_chunk",
-    "similarity_knn_graph",
-    "events_value_histogram",
-    "events_streaks",
-    "orders_market_basket",
-    "dedup_boilerplate_prefix",
-    "sql_text_lateral",
-    "sql_text_recursive",
-    "agg_correlation",
-    "multimodal_audio_energy",
-    "events_anomaly_mad",
-    "dedup_containment",
-    # Round-3 additions: Z-order layout math, cogrouped-Arrow as-of,
-    # deterministic mode.
-    "zorder_block_stats",
-    "udf_cogrouped_asof",
-    "agg_mode",
-    "cdc_merge_apply",
-    "events_user_sequences",
-    "search_hybrid_rrf",
-    "udtf_bigrams",
-    "udf_maparrow_tokencount",
-    "corpus_curriculum",
-    "embedding_pq",
-    "similarity_pq_adc",
-    "similarity_ivfpq",
-    "events_transition_matrix",
-    # Round-4 additions: the verbatim-SQL-text twins of the two hairiest
-    # TPC-H parser shapes (Q2 correlated MIN, Q21 EXISTS+NOT EXISTS chain) —
-    # the reference's actual spark.sql(queryString) execution path.
-    "sql_text_q2",
-    "sql_text_q21",
-    # Round-4 pipeline additions: incremental dedup, zero-shuffle stratified
-    # sampling, deterministic contrastive negatives, JL random projection.
-    "dedup_incremental",
-    "corpus_stratified_sample",
-    "similarity_contrastive_negatives",
-    "embedding_random_projection",
-    "corpus_prepare_pipeline",
-    "similarity_ann_recall",
-    # Round-4 ML-adjacent pipeline ops (operators/pipeline_ml.py):
-    # fixed-point EWMA window, zero-shuffle hashed linear classifier,
-    # degree-capped common-neighbor link prediction, blocked ER.
-    "events_ewma",
-    "text_hash_classifier",
-    "graph_common_neighbors",
-    "er_blocked_linkage",
-    "events_attribution",
-    "events_winsorized_revenue",
-    "dedup_lsh_recall",
-    "events_rolling_dau",
-    "dq_k_anonymity",
-    "text_keywords",
-    "orders_yoy_growth",
-    # Round-4 continuation: warehouse round-out (interval sweep, privacy,
-    # equi-depth stats, association lift, IVM partial-merge, compaction
-    # planning) + behavioral analytics (pivot split, TWAP, Tukey fences,
-    # gap analysis, HHI concentration, neighborhood Jaccard).
-    "events_concurrency",
-    "dq_l_diversity",
-    "events_equidepth_histogram",
-    "orders_basket_lift",
-    "ivm_incremental_rollup",
-    "layout_compaction_bins",
-    "events_before_after",
-    "events_twap",
-    "dq_outlier_iqr",
-    "orders_interpurchase_gap",
-    "supplier_hhi",
-    "graph_jaccard_ppm",
-    # Round-5: SPC/observability suite (closed-form CUSUM, Benford audit,
-    # cohort drift in bp, peak detection, hour-of-day seasonality) +
-    # bounded BFS, backlog aging, cross-source n-gram leakage.
-    "events_cusum",
-    "dq_benford",
-    "dq_distribution_drift",
-    "events_local_peaks",
-    "events_hourly_seasonality",
-    "graph_bfs_levels",
-    "orders_backlog_aging",
-    "corpus_cross_source_leakage",
-    # Round-5b: time-series statistics (Mann-Kendall trend, changepoint,
-    # persistence backtest) + novelty scoring, PK audit, top paths.
-    "events_trend_mannkendall",
-    "events_changepoint",
-    "events_forecast_backtest",
-    "corpus_novelty",
-    "dq_pk_uniqueness",
-    "events_top_paths",
-    # Round-9: the reference's OWN headline pair, benchmarked exactly as
-    # its README does (README.md:125-126 names TPC-DS q2+q5 at
-    # parallelism 100; TPCDSQueryBenchmark.scala:100 runs the verbatim
-    # text through spark.sql + noop) — raising the headline set to 140.
-    "sql_text_tpcds_q2",
-    "sql_text_tpcds_q5",
-]
-
 
 #: Machine-readable per-query baselines (median-of-3, fresh process,
 #: sf0.1) — the single canonical table BASELINE.md points at. bench.py
@@ -237,21 +60,6 @@ def _is_canonical_sf01(sf_dir: str) -> bool:
     return os.path.realpath(sf_dir) == os.path.realpath(CANONICAL_SF01)
 
 
-#: Queries whose median-of-3 measures warm persisted-cache re-hits
-#: (iterative/persist-heavy plans); their COLD cost is runs[0], recorded
-#: per run in COLD_BASELINE.json so rounds compare cold-vs-cold without
-#: artifact archaeology (VERDICT r9 item 8; BASELINE.md "medians of
-#: persist-heavy queries").
-PERSIST_HEAVY = (
-    "graph_pagerank",
-    "graph_connected_components",
-    "graph_bfs_levels",
-    "graph_common_neighbors",
-    "graph_jaccard_ppm",
-    "kmeans_lloyd",
-    "dedup_cluster_canonical",
-)
-
 #: One run per query is stall-fragile: a single bad host-scheduling window
 #: poisons the committed artifact with numbers that read as 2x-gate
 #: failures (BENCH_r03: agg_correlation 16.5 s recorded vs 3.5 s fresh).
@@ -270,12 +78,6 @@ STALL_FACTOR = 2.0
 #: round-3 adjudications treated exactly this class as noise), while any
 #: real regression on a query that matters clears half a second easily.
 STALL_ABS_SLACK = 0.5
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
 def drift_factor(cal_now: float | None, cal_base: float | None) -> float:
@@ -324,37 +126,10 @@ def main() -> None:
     except (OSError, KeyError, ValueError, TypeError):
         pass
 
-    # Engine warmup (JIT, codegen, parquet reader init) so per-query numbers
-    # measure the query, not JVM startup. The reference's harness does the
-    # same via numIters warmup runs (TPCDSQueryBenchmark.scala:96-101).
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-
-    # Host-calibration probe (BENCH_AB_HOSTDRIFT lesson): a fixed,
-    # CODE-INDEPENDENT Spark job (generator + md5 + small shuffle) timed
-    # median-of-3. Its value moves only with host state, never with repo
-    # changes, so any future bench total can be normalized:
-    # total/calibration is comparable across host windows where raw totals
-    # are not. Reference value for the current window in BASELINE.md.
-    def _calibration_probe() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 16_000_000, 1, 32)
-            .selectExpr("substring(md5(cast(id AS string)), 1, 4) AS k")
-            .groupBy("k")
-            .count()
-            .selectExpr("sum(count) AS s", "count(*) AS n")
-            .collect()
-        )
-        return time.perf_counter() - t0
-
-    # Statistic is MIN of 3 probes, matching BASELINE_QUERIES.json's
-    # calibration_sec which pins the baseline window's FASTEST probe — a
-    # median-vs-fastest mismatch made drift_factor systematically >1 on an
-    # unchanged host, silently widening the 2x gate (ADVICE r8, medium).
-    # min is also the right estimator of unloaded host speed: probe noise
-    # is one-sided (scheduling stalls only ever add time).
-    cal_probes = [round(_calibration_probe(), 3) for _ in range(3)]
+    warm_up(spark, sf_dir)
+    # Host-calibration probe (BENCH_AB_HOSTDRIFT lesson): total/calibration
+    # is comparable across host windows where raw totals are not.
+    cal_probes = calibration_probe(spark)
     calibration = min(cal_probes)
     drift = round(drift_factor(calibration, cal_base), 3)
     print(
@@ -363,45 +138,32 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    specs = all_specs()
     timings: dict[str, float] = {}
     details: dict[str, dict] = {}
     for name in HEADLINE:
-        builder = specs[name].builder
-
-        def one_run() -> float:
-            # Rebuild the DataFrame each run so the timing covers plan
-            # construction too; repeated runs share warm caches (persisted
-            # intermediates re-match by logical plan), same methodology as
-            # the canonical baseline.
-            t0 = time.perf_counter()
-            write_noop(builder(spark, sf_dir))
-            return time.perf_counter() - t0
-
-        runs = [one_run() for _ in range(runs_per_query)]
-        t = _median(runs)
-        base = baselines.get(name)
-        retimed = False
-        if is_violation(t, base, drift):
+        # Each run rebuilds the query, so the timing covers plan
+        # construction too; runs[0] is cold and later runs re-hit the
+        # query's own pinned frames, which measure_query releases at the
+        # end — no query inherits another query's cached blocks.
+        ms = [measure_query(spark, name, sf_dir, runs_per_query)]
+        t = statistics.median(ms[0].runs)
+        if is_violation(t, baselines.get(name), drift):
             # Stall suspect: re-time in the same process and keep the best
             # observed run — a genuine plan regression stays slow across
-            # all runs; a host stall does not.
-            runs += [one_run() for _ in range(RETIME_RUNS)]
-            t = min(runs)
-            retimed = True
+            # all runs; a host stall does not. The re-time is a second
+            # measure_query call, so its first run is cold again.
+            ms.append(measure_query(spark, name, sf_dir, RETIME_RUNS))
+            t = min(r for m in ms for r in m.runs)
         timings[name] = round(t, 3)
         details[name] = {
             "t": timings[name],
-            "runs": [round(r, 3) for r in runs],
-            "retimed": retimed,
+            "runs": [round(r, 3) for m in ms for r in m.runs],
+            "build_s": [round(b, 3) for m in ms for b in m.build_s],
+            "executor_cpu_s": round(sum(m.cpu_s for m in ms), 3),
+            "retimed": len(ms) > 1,
         }
-        flag = " [retimed]" if retimed else ""
+        flag = " [retimed]" if len(ms) > 1 else ""
         print(f"  {name}: {timings[name]:.3f}s{flag}", file=sys.stderr)
-        # Builders persist only through catalog.pin. Release once the
-        # query's runs complete: its warm runs re-hit its own pinned
-        # frames, and no query inherits another query's cached blocks, so
-        # runs[0] pays the query's full cold cost.
-        release_persisted()
 
     total = round(sum(timings.values()), 3)
     # Per-query baseline verdicts, computed in-run so the artifact is
@@ -463,17 +225,15 @@ def main() -> None:
             fh.write(json.dumps(full) + "\n")
     except OSError:
         pass  # read-only checkout: stdout carries everything but details
-    # Cold-path record for the persist-heavy set (runs[0] = no warm
-    # cache), refreshed only by canonical sf0.1 runs so the committed
-    # file stays one protocol.
+    # Cold-path record for every headline query (runs[0]: nothing pinned
+    # yet), refreshed only by canonical sf0.1 runs so the committed file
+    # stays one protocol.
     if _is_canonical_sf01(sf_dir):
         cold = {
             "_protocol": "runs[0] of the canonical sf0.1 bench (cold persisted caches)",
             "_sf_dir": CANONICAL_SF01,
             "_calibration_sec": calibration,
-            "queries": {
-                n: details[n]["runs"][0] for n in PERSIST_HEAVY if n in details
-            },
+            "queries": {n: details[n]["runs"][0] for n in HEADLINE},
         }
         try:
             with open(os.path.join(_REPO, "COLD_BASELINE.json"), "w") as fh:

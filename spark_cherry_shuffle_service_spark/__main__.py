@@ -8,7 +8,7 @@ PySpark-native engine:
     python -m spark_cherry_shuffle_service_spark sql "SELECT ..." [--sf-dir D]
     python -m spark_cherry_shuffle_service_spark workload synthetic -n 1000000 -p 100
     python -m spark_cherry_shuffle_service_spark workload skew -n 1000000 -p 100 -k 0.8
-    python -m spark_cherry_shuffle_service_spark bench [--queries a,b,c]
+    python -m spark_cherry_shuffle_service_spark bench [--queries a,b,c] [--runs N]
     python -m spark_cherry_shuffle_service_spark explain <name>
 
 Cluster sizing flags map to config exactly as the reference's -p flag maps
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import sys
 import time
 
@@ -27,8 +28,6 @@ from spark_cherry_shuffle_service_spark.session import get_spark
 from spark_cherry_shuffle_service_spark.sources.catalog import (
     DEFAULT_SF_DIR,
     register_views,
-    release_persisted,
-    write_noop,
 )
 
 
@@ -163,41 +162,41 @@ def cmd_explain(args) -> int:
 
 
 def cmd_bench(args) -> int:
-    """Median-of-N timing through the noop sink — the SAME protocol as
-    bench.py (plan construction included per run; warm caches shared across
-    runs), so numbers from this command are directly comparable to
-    BASELINE_QUERIES.json. Round 7's verdict flagged the previous
-    single-cold-run form as an adjudication trap: isolated cold runs read
-    3-10x the warm-median baselines and masqueraded as regressions."""
+    """bench.py's protocol on any query subset: engine warm-up, the
+    calibration probe, then plans/measure.py's loop per query (each run
+    rebuilds the query and writes it to the noop sink; runs[0] is cold,
+    later runs re-hit the query's own pinned frames), so the medians are
+    directly comparable to BASELINE_QUERIES.json. Prints one JSON line with each
+    run's total and its plan-construction share. A single-query A/B is
+    `bench --queries X --runs 5` in a fresh process per code variant."""
+    from spark_cherry_shuffle_service_spark.plans.measure import (
+        calibration_probe,
+        measure_query,
+        warm_up,
+    )
     from spark_cherry_shuffle_service_spark.plans.registry import all_specs
 
     spark = _spark(args)
-    specs = all_specs()
     names = [_resolve(n) for n in args.queries.split(",")] if args.queries else sorted(
-        n for n, s in specs.items() if s.oracle is not None
+        n for n, s in all_specs().items() if s.oracle is not None
     )
-    timings = {}
-    details = {}
+    warm_up(spark, args.sf_dir)
+    calibration = min(calibration_probe(spark))
+    timings, runs, build_s = {}, {}, {}
     for name in names:
-        runs = []
-        for _ in range(max(1, args.runs)):
-            # Rebuild the DataFrame each run (bench.py's one_run shape).
-            df = specs[name].builder(spark, args.sf_dir)
-            t0 = time.perf_counter()
-            write_noop(df)
-            runs.append(round(time.perf_counter() - t0, 3))
-        release_persisted()  # once per query, after its runs (bench.py)
-        s = sorted(runs)
-        mid = s[len(s) // 2] if len(s) % 2 else (s[len(s) // 2 - 1] + s[len(s) // 2]) / 2
-        timings[name] = round(mid, 3)
-        details[name] = runs
+        m = measure_query(spark, name, args.sf_dir, max(1, args.runs))
+        runs[name] = [round(r, 3) for r in m.runs]
+        build_s[name] = [round(b, 3) for b in m.build_s]
+        timings[name] = round(statistics.median(runs[name]), 3)
     print(
         json.dumps(
             {
                 "protocol": {"runs_per_query": max(1, args.runs), "stat": "median"},
                 "queries": timings,
-                "runs": details,
+                "runs": runs,
+                "build_s": build_s,
                 "total": round(sum(timings.values()), 3),
+                "calibration_sec": calibration,
             }
         )
     )
@@ -206,27 +205,19 @@ def cmd_bench(args) -> int:
 
 def cmd_shufflestats(args) -> int:
     """Measured shuffle accounting (plans/shufflestats.py): per-query
-    shuffle/input bytes from the REST status API + static exchange counts
+    shuffle/input bytes from the status store + static exchange counts
     from the plan. Writes the artifact JSON and prints a summary line."""
+    from spark_cherry_shuffle_service_spark.plans.measure import HEADLINE
     from spark_cherry_shuffle_service_spark.plans.shufflestats import (
         measure_queries,
         summarize,
     )
 
-    spark = get_spark(
-        app_name="cherry-spark-shufflestats",
-        shuffle_partitions=args.parallelism,
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    if args.queries:
-        names = [_resolve(n) for n in args.queries.split(",")]
-    else:
-        # Default to bench.py's HEADLINE protocol (the committed
-        # SHUFFLE_STATS artifacts are headline-scoped); measuring the whole
-        # registry serially at a generated SF is hours of wall-clock.
-        import bench
-
-        names = list(bench.HEADLINE)
+    spark = get_spark(app_name="cherry-spark-shufflestats", shuffle_partitions=args.parallelism)
+    # Default to the HEADLINE protocol (the committed SHUFFLE_STATS
+    # artifacts are headline-scoped); measuring the whole registry
+    # serially at a generated SF is hours of wall-clock.
+    names = [_resolve(n) for n in args.queries.split(",")] if args.queries else list(HEADLINE)
     results = measure_queries(spark, args.sf_dir, names)
     payload = {"_sf_dir": args.sf_dir, "_summary": summarize(results), **results}
     with open(args.out, "w") as fh:
@@ -290,7 +281,7 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("name")
 
     st = sub.add_parser(
-        "shufflestats", help="measured per-query shuffle/input bytes (REST metrics)"
+        "shufflestats", help="measured per-query shuffle/input bytes (stage metrics)"
     )
     st.add_argument("--queries", default=None)
     st.add_argument("--out", default="SHUFFLE_STATS.json")

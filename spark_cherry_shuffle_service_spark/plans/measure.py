@@ -1,0 +1,310 @@
+"""One measurement loop for registered queries.
+
+Every per-query timer calls `measure_query` (bench.py, the CLI's `bench`
+and `shufflestats`). Each run rebuilds the query and forces it through the
+noop sink, the reference's protocol (TPCDSQueryBenchmark.scala:100
+`spark.sql(q).noop()`), timing plan construction and execution
+separately. After the runs, outside the timed region, the stages the query
+launched are summed from Spark's in-process status store: the data the
+UI's REST `/stages` endpoint serves, readable with `spark.ui.enabled=false`.
+The query's pinned frames are then released once (catalog.pin's rule), so
+runs[0] of the next call is cold and later runs re-hit the query's own
+pinned frames.
+"""
+
+from __future__ import annotations
+
+import time
+from dataclasses import dataclass
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+
+from spark_cherry_shuffle_service_spark.plans.registry import get
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted, write_noop
+
+# Headline set: the relational spine + shuffle-heavy workloads + the
+# north-star extension operators. A representative slice of SURVEY.md §2.
+HEADLINE = [
+    "pricing_summary",
+    "top_revenue",
+    "join_inner",
+    "join_theta",
+    "join_full",
+    "cumulative_compare",
+    "rollup_grouping",
+    "window_avg_dev",
+    "agg_distinct",
+    "synthetic_groupcount",
+    "skewed_groupcount",
+    "events_sessionize",
+    "text_token_count",
+    "text_fingerprint",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "similarity_topk",
+    "similarity_lsh_buckets",
+    "similarity_ivf",
+    "agg_cube",
+    "window_lead_lag",
+    "skewed_salted_groupcount",
+    "shipping_priority",
+    "local_supplier_volume",
+    "events_asof_join",
+    "graph_pagerank",
+    "text_wordcount",
+    "events_multi_rollup",
+    "orders_pivot",
+    "udaf_grouped_geomean",
+    "dedup_embedding_cosine",
+    "events_funnel",
+    "events_retention",
+    "events_sliding_window",
+    "window_distribution",
+    "udf_grouped_map_zscore",
+    "dedup_crossmodal",
+    "graph_connected_components",
+    # TPC-H spine completion (operators/tpch_suite.py): the heaviest of the
+    # Q2-Q22 analogs — multi-way join trees, EXISTS/NOT-EXISTS chains,
+    # correlated-avg decorrelation, disjunctive join predicates.
+    "volume_shipping",
+    "market_share",
+    "product_profit",
+    "returned_items",
+    "customer_distribution",
+    "large_volume_customers",
+    "discounted_revenue",
+    "waiting_suppliers",
+    # Training-data pipeline stages (operators/datapipe.py).
+    "dataset_split",
+    "pack_sequences",
+    "corpus_filter_funnel",
+    "kmeans_assign",
+    "skewed_salted_join",
+    # Round-2 additions: bucketed pair generation, temporal range join,
+    # full Lloyd iteration, decontamination, quantization, decimal-native
+    # money, verbatim SQL-text spine.
+    "similarity_pairs",
+    "dedup_ngram_jaccard",
+    "events_range_join",
+    "kmeans_lloyd",
+    "corpus_decontaminate",
+    "embedding_quantize",
+    "decimal_pricing",
+    "sql_text_q1",
+    # Round-2 second tranche: repetition/quality filters, BM25 + index,
+    # token-budget cut, near-dup clustering, exact percentiles, and the
+    # disjunctive-predicate SQL text.
+    "text_repetition",
+    "text_bm25",
+    "text_inverted_index",
+    "corpus_token_budget",
+    "dedup_cluster_canonical",
+    "agg_percentiles",
+    "sql_text_q19",
+    # Round-2 third tranche: unigram-LM surprisal scoring, temperature
+    # language mixing, RAG chunking, LSH k-NN graph.
+    "text_surprisal",
+    "corpus_temperature_sample",
+    "text_chunk",
+    "similarity_knn_graph",
+    "events_value_histogram",
+    "events_streaks",
+    "orders_market_basket",
+    "dedup_boilerplate_prefix",
+    "sql_text_lateral",
+    "sql_text_recursive",
+    "agg_correlation",
+    "multimodal_audio_energy",
+    "events_anomaly_mad",
+    "dedup_containment",
+    # Round-3 additions: Z-order layout math, cogrouped-Arrow as-of,
+    # deterministic mode.
+    "zorder_block_stats",
+    "udf_cogrouped_asof",
+    "agg_mode",
+    "cdc_merge_apply",
+    "events_user_sequences",
+    "search_hybrid_rrf",
+    "udtf_bigrams",
+    "udf_maparrow_tokencount",
+    "corpus_curriculum",
+    "embedding_pq",
+    "similarity_pq_adc",
+    "similarity_ivfpq",
+    "events_transition_matrix",
+    # Round-4 additions: the verbatim-SQL-text twins of the two hairiest
+    # TPC-H parser shapes (Q2 correlated MIN, Q21 EXISTS+NOT EXISTS chain) —
+    # the reference's actual spark.sql(queryString) execution path.
+    "sql_text_q2",
+    "sql_text_q21",
+    # Round-4 pipeline additions: incremental dedup, zero-shuffle stratified
+    # sampling, deterministic contrastive negatives, JL random projection.
+    "dedup_incremental",
+    "corpus_stratified_sample",
+    "similarity_contrastive_negatives",
+    "embedding_random_projection",
+    "corpus_prepare_pipeline",
+    "similarity_ann_recall",
+    # Round-4 ML-adjacent pipeline ops (operators/pipeline_ml.py):
+    # fixed-point EWMA window, zero-shuffle hashed linear classifier,
+    # degree-capped common-neighbor link prediction, blocked ER.
+    "events_ewma",
+    "text_hash_classifier",
+    "graph_common_neighbors",
+    "er_blocked_linkage",
+    "events_attribution",
+    "events_winsorized_revenue",
+    "dedup_lsh_recall",
+    "events_rolling_dau",
+    "dq_k_anonymity",
+    "text_keywords",
+    "orders_yoy_growth",
+    # Round-4 continuation: warehouse round-out (interval sweep, privacy,
+    # equi-depth stats, association lift, IVM partial-merge, compaction
+    # planning) + behavioral analytics (pivot split, TWAP, Tukey fences,
+    # gap analysis, HHI concentration, neighborhood Jaccard).
+    "events_concurrency",
+    "dq_l_diversity",
+    "events_equidepth_histogram",
+    "orders_basket_lift",
+    "ivm_incremental_rollup",
+    "layout_compaction_bins",
+    "events_before_after",
+    "events_twap",
+    "dq_outlier_iqr",
+    "orders_interpurchase_gap",
+    "supplier_hhi",
+    "graph_jaccard_ppm",
+    # Round-5: SPC/observability suite (closed-form CUSUM, Benford audit,
+    # cohort drift in bp, peak detection, hour-of-day seasonality) +
+    # bounded BFS, backlog aging, cross-source n-gram leakage.
+    "events_cusum",
+    "dq_benford",
+    "dq_distribution_drift",
+    "events_local_peaks",
+    "events_hourly_seasonality",
+    "graph_bfs_levels",
+    "orders_backlog_aging",
+    "corpus_cross_source_leakage",
+    # Round-5b: time-series statistics (Mann-Kendall trend, changepoint,
+    # persistence backtest) + novelty scoring, PK audit, top paths.
+    "events_trend_mannkendall",
+    "events_changepoint",
+    "events_forecast_backtest",
+    "corpus_novelty",
+    "dq_pk_uniqueness",
+    "events_top_paths",
+    # Round-9: the reference's OWN headline pair, benchmarked exactly as
+    # its README does (README.md:125-126 names TPC-DS q2+q5 at
+    # parallelism 100; TPCDSQueryBenchmark.scala:100 runs the verbatim
+    # text through spark.sql + noop) — raising the headline set to 140.
+    "sql_text_tpcds_q2",
+    "sql_text_tpcds_q5",
+]
+
+
+#: Stage fields summed per query (StageData names, as the REST API shows them).
+_BYTE_FIELDS = ("shuffleWriteBytes", "shuffleReadBytes", "inputBytes", "outputBytes")
+
+
+@dataclass(frozen=True)
+class Measurement:
+    """One `measure_query` call: per-run times plus the stage totals of
+    every run (stages the status store marked COMPLETE or SKIPPED)."""
+
+    build_s: list[float]
+    exec_s: list[float]
+    stages: int
+    bytes: dict[str, int]
+    cpu_s: float
+
+    @property
+    def runs(self) -> list[float]:
+        """Per-run totals: plan construction plus execution."""
+        return [b + e for b, e in zip(self.build_s, self.exec_s)]
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """JIT, codegen and parquet reader init, so per-query numbers measure
+    the query, not JVM startup (the reference warms up through numIters,
+    TPCDSQueryBenchmark.scala:96-101)."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(f"{sf_dir}/nation.parquet").count()
+
+
+def calibration_probe(spark: SparkSession) -> list[float]:
+    """Three readings of a fixed, code-independent job (generator + md5 +
+    small shuffle); report their MIN. Its value moves only with host
+    state, so total/calibration compares across host windows where raw
+    totals do not (BENCH_AB_HOSTDRIFT). Min, because probe noise is
+    one-sided and BASELINE_QUERIES.json's calibration_sec pins the
+    baseline window's fastest reading (ADVICE r8)."""
+
+    def once() -> float:
+        t0 = time.perf_counter()
+        (
+            spark.range(0, 16_000_000, 1, 32)
+            .selectExpr("substring(md5(cast(id AS string)), 1, 4) AS k")
+            .groupBy("k")
+            .count()
+            .selectExpr("sum(count) AS s", "count(*) AS n")
+            .collect()
+        )
+        return time.perf_counter() - t0
+
+    return [round(once(), 3) for _ in range(3)]
+
+
+def _last_stage_id(spark: SparkSession) -> int:
+    """Highest stage id in the status store, or -1. stageList walks the
+    store newest-first inside the JVM; only its head crosses py4j."""
+    sc = spark.sparkContext
+    empty = sc._jvm.java.util.ArrayList()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stages = sc._jsc.sc().statusStore().stageList(empty, False, False, no_quantiles, empty)
+    return stages.head().stageId() if stages.nonEmpty() else -1
+
+
+def _stage_totals(spark: SparkSession, after: int) -> dict:
+    """Sum the latest attempt of every stage with id above `after`. Only
+    these stages cross py4j, so the cost does not grow with the stages
+    earlier queries left in the store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+    store = sc.statusStore()
+    totals = dict.fromkeys(_BYTE_FIELDS, 0)
+    n = cpu_ns = 0
+    for sid in range(after + 1, _last_stage_id(spark) + 1):
+        try:
+            s = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # never posted, or evicted by retainedStages
+            continue
+        if s.status().toString() not in ("COMPLETE", "SKIPPED"):
+            continue
+        n += 1
+        cpu_ns += s.executorCpuTime()
+        for f in _BYTE_FIELDS:
+            totals[f] += getattr(s, f)()
+    return {"stages": n, "bytes": totals, "cpu_s": cpu_ns / 1e9}
+
+
+def measure_query(spark: SparkSession, name: str, sf_dir: str, runs: int) -> Measurement:
+    """Build and run the registered query `runs` times through the noop
+    sink; then read its stage totals and release its pinned frames."""
+    builder = get(name).builder
+    after = _last_stage_id(spark)
+    build_s: list[float] = []
+    exec_s: list[float] = []
+    try:
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            df = builder(spark, sf_dir)
+            t1 = time.perf_counter()
+            write_noop(df)
+            build_s.append(t1 - t0)
+            exec_s.append(time.perf_counter() - t1)
+        totals = _stage_totals(spark, after)
+    finally:
+        release_persisted()
+    return Measurement(build_s, exec_s, **totals)

@@ -2,12 +2,12 @@
 
 SCALE.md's "shuffle inventory per operator family" states how many
 exchanges each operator family pays and what stays map-side. This module
-turns those claims into MEASUREMENTS: run each query through the noop
-sink in a UI-enabled session and pull its stages' shuffle-write /
-shuffle-read / input bytes from Spark's REST status API (the same
-numbers the Spark UI shows; the reference's metrics-monitor scrapes the
-equivalent executor endpoints). The committed artifact
-(SHUFFLE_STATS.json) makes "this operator shuffles once / never" a
+turns those claims into MEASUREMENTS: run each query once through
+plans/measure.py and keep its stages' shuffle-write / shuffle-read /
+input bytes from Spark's in-process status store (the numbers the Spark
+UI and its REST API show, read with the UI off; the reference's
+metrics-monitor scrapes the equivalent executor endpoints). The committed
+artifact (SHUFFLE_STATS.json) makes "this operator shuffles once / never" a
 checked property at data scale, not prose — `measure, don't guess`.
 
 Static exchange counts come from the pre-execution physical plan
@@ -23,41 +23,13 @@ Usage (CLI):  python -m spark_cherry_shuffle_service_spark shufflestats
 
 from __future__ import annotations
 
-import json
 import re
-import urllib.request
+import sys
 
 from pyspark.sql import SparkSession
 
-#: stage fields summed per query (REST /applications/{id}/stages names)
-_BYTE_FIELDS = (
-    "shuffleWriteBytes",
-    "shuffleReadBytes",
-    "inputBytes",
-    "outputBytes",
-)
-
 _SHUFFLE_EXCHANGE = re.compile(r"\bExchange (hashpartitioning|rangepartitioning|SinglePartition)")
 _BROADCAST_EXCHANGE = re.compile(r"\bBroadcastExchange\b")
-
-
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(f"{base}{path}", timeout=30) as r:
-        return json.loads(r.read())
-
-
-def _api_base(spark: SparkSession) -> str:
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        raise RuntimeError(
-            "Spark UI is disabled — shufflestats needs spark.ui.enabled=true "
-            "(the REST status API serves the stage metrics)"
-        )
-    return f"{ui}/api/v1/applications/{spark.sparkContext.applicationId}"
-
-
-def _stage_key(s: dict) -> tuple:
-    return (s["stageId"], s.get("attemptId", 0))
 
 
 def plan_exchange_counts(df) -> dict[str, int]:
@@ -74,43 +46,27 @@ def plan_exchange_counts(df) -> dict[str, int]:
 def measure_queries(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> dict[str, dict]:
-    """Run each named query through the noop sink and attribute the new
-    stages' byte metrics to it. Stages SKIPPED because a persisted or
-    reused exchange served them report zero bytes — which is the point:
-    the artifact shows what each query actually paid."""
+    """Run each named query once and attribute its new stages' byte
+    metrics to it. Stages SKIPPED because a persisted or reused exchange
+    served them report zero bytes — which is the point: the artifact
+    shows what each query actually paid."""
+    from spark_cherry_shuffle_service_spark.plans.measure import measure_query
     from spark_cherry_shuffle_service_spark.plans.registry import all_specs
-    from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted, write_noop
+    from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 
     specs = all_specs()
-    base = _api_base(spark)
     results: dict[str, dict] = {}
-    seen = {_stage_key(s) for s in _rest(base, "/stages")}
     for name in names or sorted(specs):
-        import sys
-        import time
-
-        t0 = time.perf_counter()
         print(f"  [shufflestats] {name} ...", file=sys.stderr, flush=True)
-        df = specs[name].builder(spark, sf_dir)
-        static = plan_exchange_counts(df)
-        write_noop(df)
-        print(
-            f"  [shufflestats] {name} done in {time.perf_counter() - t0:.1f}s",
-            file=sys.stderr,
-            flush=True,
-        )
-        stages = _rest(base, "/stages")
-        new = [
-            s
-            for s in stages
-            if _stage_key(s) not in seen and s.get("status") in ("COMPLETE", "SKIPPED")
-        ]
-        seen |= {_stage_key(s) for s in stages}
-        row = {f: int(sum(s.get(f, 0) for s in new)) for f in _BYTE_FIELDS}
-        row["stages"] = len(new)
-        row.update(static)
-        results[name] = row
+        m = measure_query(spark, name, sf_dir, 1)
+        print(f"  [shufflestats] {name} done in {m.runs[0]:.1f}s", file=sys.stderr, flush=True)
+        row = dict(m.bytes, stages=m.stages)
+        # Exchange counts come from a fresh, unexecuted build: planned
+        # after its run, the measured frame would print the final plans of
+        # its materialized pinned frames instead of the initial plan.
+        row.update(plan_exchange_counts(specs[name].builder(spark, sf_dir)))
         release_persisted()
+        results[name] = row
     return results
 
 

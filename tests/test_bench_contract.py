@@ -9,14 +9,14 @@ grading run.
 
 from __future__ import annotations
 
-from bench import HEADLINE
+from spark_cherry_shuffle_service_spark.plans.measure import HEADLINE
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
 from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 from tests.conftest import SF_SMOKE
 
 
 def test_every_headline_query_builds(spark):
-    """Every bench.py HEADLINE entry must resolve in the registry and build
+    """Every HEADLINE entry must resolve in the registry and build
     to a DataFrame with a non-empty schema (analysis runs; no execution)."""
     specs = all_specs()
     missing = [n for n in HEADLINE if n not in specs]
@@ -46,14 +46,6 @@ def test_entry_module_contract(spark):
     assert set(oracles) <= set(qs), "oracle_sql keys must be a subset of queries"
     df = mod.entry(spark)
     assert len(df.schema.fields) > 0
-
-
-def test_median_helper():
-    from bench import _median
-
-    assert _median([3.0]) == 3.0
-    assert _median([5.0, 1.0, 2.0]) == 2.0
-    assert _median([4.0, 1.0]) == 2.5
 
 
 def test_baseline_queries_file_matches_headline():
@@ -170,24 +162,20 @@ def test_baseline_file_selection_by_sf():
     assert baseline_file_for("/root/repo/.genscale/sf0.1") is None
 
 
-def test_cold_baseline_covers_persist_heavy_set():
-    """COLD_BASELINE.json (VERDICT r9 item 8): every persist-heavy query
-    must carry a cold runs[0] entry, and the set itself must stay inside
-    the headline protocol so bench.py can refresh it."""
+def test_cold_baseline_covers_headline_set():
+    """COLD_BASELINE.json (VERDICT r9 item 8, r12 item 7): every headline
+    query must carry a cold runs[0] entry from the canonical bench."""
     import json
     import os
 
     import pytest
 
-    from bench import HEADLINE, PERSIST_HEAVY
-
-    assert set(PERSIST_HEAVY) <= set(HEADLINE)
     path = "/root/repo/COLD_BASELINE.json"
     if not os.path.exists(path):
         pytest.skip("COLD_BASELINE.json not yet generated")
     with open(path) as fh:
         cold = json.load(fh)
-    assert set(PERSIST_HEAVY) <= set(cold["queries"])
+    assert set(HEADLINE) <= set(cold["queries"])
     assert all(v > 0 for v in cold["queries"].values())
     # ADVICE r10: the artifact must name the canonical fixture dir it was
     # measured on — a generated sf0.1 lookalike can never refresh it.

@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 
 from spark_cherry_shuffle_service_spark.__main__ import main
+from spark_cherry_shuffle_service_spark.sources import catalog
 from tests.conftest import SF_SMOKE
 
 
@@ -58,6 +59,14 @@ def test_cli_bench_subset(spark, capsys):
     assert all(len(runs) == 3 for runs in rec["runs"].values())
     for name, t in rec["queries"].items():
         assert t == sorted(rec["runs"][name])[1], (name, t, rec["runs"][name])
+    # One timer (plans/measure.py): each run total includes the query's
+    # plan construction, and the query's pinned frames are released.
+    assert set(rec["build_s"]) == set(rec["runs"])
+    for name, builds in rec["build_s"].items():
+        assert len(builds) == 3
+        assert all(0 < b <= r for b, r in zip(builds, rec["runs"][name])), (name, builds)
+    assert rec["calibration_sec"] > 0
+    assert not catalog._PINNED.get(spark)
 
 
 def test_cli_explain_shows_pushed_filters(spark, capsys):

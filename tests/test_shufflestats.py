@@ -1,41 +1,22 @@
 """Measured shuffle accounting (plans/shufflestats.py): SCALE.md's
 shuffle-inventory claims, checked against Spark's own stage metrics
-instead of prose. Runs in a subprocess because the REST status API needs
-a UI-enabled SparkContext and the shared test fixture's is UI-disabled
-(one context per JVM)."""
+instead of prose. The metrics come from the in-process status store, so
+the test runs on the shared UI-disabled session."""
 
 from __future__ import annotations
 
 import json
-import subprocess
-import sys
 
+from spark_cherry_shuffle_service_spark.__main__ import main
 from tests.conftest import SF_SMOKE
 
 _QUERIES = "pricing_summary,corpus_stratified_sample,dedup_exact,join_inner"
 
 
-def test_shufflestats_measures_the_claimed_inventory(tmp_path):
+def test_shufflestats_measures_the_claimed_inventory(spark, tmp_path):
     out = tmp_path / "stats.json"
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "spark_cherry_shuffle_service_spark",
-            "--sf-dir",
-            SF_SMOKE,
-            "shufflestats",
-            "--queries",
-            _QUERIES,
-            "--out",
-            str(out),
-        ],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
+    argv = ["--sf-dir", SF_SMOKE, "shufflestats", "--queries", _QUERIES, "--out", str(out)]
+    assert main(argv) == 0
     stats = json.loads(out.read_text())
 
     # SCALE.md: "exact dedup = one shuffle on md5 fingerprint"
@@ -73,7 +54,7 @@ def test_committed_shuffle_stats_artifact_is_coherent():
 
     import pytest
 
-    from bench import HEADLINE
+    from spark_cherry_shuffle_service_spark.plans.measure import HEADLINE
 
     path = "/root/repo/SHUFFLE_STATS.json"
     if not os.path.exists(path):

@@ -21,7 +21,11 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 from spark_cherry_shuffle_service_spark.plans.registry import get
-from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted, write_noop
+from spark_cherry_shuffle_service_spark.sources.catalog import (
+    read_parquet,
+    release_persisted,
+    write_noop,
+)
 
 # Headline set: the relational spine + shuffle-heavy workloads + the
 # north-star extension operators. A representative slice of SURVEY.md §2.
@@ -230,7 +234,7 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     the query, not JVM startup (the reference warms up through numIters,
     TPCDSQueryBenchmark.scala:96-101)."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/nation.parquet").count()
+    read_parquet(spark, f"{sf_dir}/nation.parquet").count()
 
 
 def calibration_probe(spark: SparkSession) -> list[float]:

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_cherry_shuffle_service_spark.sources.catalog import read_parquet
+
 __all__ = ["latest_committed_round", "resumable_min_label_rounds"]
 
 
@@ -85,7 +87,7 @@ def resumable_min_label_rounds(
         if die_after_round == 0:
             os._exit(137)
 
-    labels = spark.read.parquet(_round_path(state_dir, start))
+    labels = read_parquet(spark, _round_path(state_dir, start))
     for k in range(start + 1, rounds + 1):
         neighbor_min = (
             sym.join(labels, sym["dst"] == labels["node"])
@@ -106,7 +108,7 @@ def resumable_min_label_rounds(
         # the file, not the k-round shuffle chain (the gotcha in graph.py:
         # without this, round k recomputes rounds 1..k-1).
         labels.write.mode("overwrite").parquet(_round_path(state_dir, k))
-        labels = spark.read.parquet(_round_path(state_dir, k))
+        labels = read_parquet(spark, _round_path(state_dir, k))
         if die_after_round == k:
             os._exit(137)
     return labels

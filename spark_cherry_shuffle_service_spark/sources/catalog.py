@@ -15,12 +15,14 @@ then prune entire directories.
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Every driver fixture table (TESTDATA.md).
 TABLES = (
@@ -40,8 +42,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 #: Per-session plan memo for `table()` (guide §1.2 "per-task work" at the
-#: driver: plan construction). A `spark.read.parquet` costs ~40-100 ms of
-#: driver time (py4j + relation resolution + footer schema inference), and
+#: driver: plan construction). A parquet read costs driver time (py4j +
+#: file listing + relation resolution, plus a schema-inference job when the
+#: footer holds no Spark schema: see read_parquet), and
 #: builders re-read the same fixture tables on every query construction —
 #: measured at ~25% of the headline bench's wall clock (OPTIMIZATION_r12.md
 #: item 4). DataFrames are immutable plans, so reusing one is pure metadata
@@ -77,6 +80,63 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+#: Footer key under which Spark's parquet writer stores the row schema as
+#: JSON (ParquetReadSupport.SPARK_METADATA_KEY).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files Spark's file index lists under a local parquet path,
+    sorted by path (ParquetUtils.splitFiles): `_`/`.`-prefixed names are
+    skipped. Raises OSError for a path that is not a local file or a flat
+    directory (a partitioned layout is left to Spark's discovery)."""
+    if os.path.isfile(path):
+        return [path]
+    files = [os.path.join(path, n) for n in sorted(os.listdir(path)) if not n.startswith(("_", "."))]
+    if any(os.path.isdir(f) for f in files):
+        raise IsADirectoryError(path)
+    return files
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's inference would return, read from the first data
+    file's footer on the driver, or None when only inference gives it.
+
+    With schema merging off, Spark infers from the first data file's
+    footer, and when that footer holds the Spark row-schema key it returns
+    exactly that schema (ParquetFileFormat.readSchemaFromFooter). That
+    inference is a Spark job; this read is not.
+    """
+    import pyarrow.parquet as pq
+
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    try:
+        files = _parquet_files(path)
+        blob = files and (pq.read_metadata(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return StructType.fromJson(json.loads(blob)) if blob else None
+    except (OSError, ValueError, KeyError, TypeError):  # unreadable or foreign footer: infer
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The package's one parquet read: `spark.read.parquet(path)`, with the
+    schema taken from the footer when Spark wrote the file, so the read
+    launches no schema-inference job. Any other path reads as before."""
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a local parquet file or flat directory, summed from
+    the footers: what `read.parquet(path).count()` returns, with no job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         from pyspark.sql import functions as F
@@ -85,7 +145,7 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Legacy conf makes a TIMESTAMP(NANOS) file readable (as long);
         # harmless no-op for µs files.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        raw = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = raw.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             # nanos-as-long → µs timestamp; lossless, fixture has no sub-µs.
@@ -99,7 +159,7 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             return raw.withColumn("ts", F.col("ts").cast("timestamp"))
         return raw
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

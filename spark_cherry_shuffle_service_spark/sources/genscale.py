@@ -48,6 +48,8 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_cherry_shuffle_service_spark.sources.catalog import parquet_rows
+
 #: Default output location for the generated ~sf1 set (inside the repo —
 #: /root/testdata is read-only to the engine).
 GEN_DIR = os.environ.get("SPARK_GRAFT_GEN_DIR", "/root/repo/.genscale/sf1")
@@ -417,7 +419,7 @@ def generate_scaled_fixtures(
     for name, df in frames.items():
         path = os.path.join(out_dir, f"{name}.parquet")
         df.write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        counts[name] = parquet_rows(path)
     copied = COPIED_TABLES if doc_scale is None else tuple(
         t for t in COPIED_TABLES if t not in ("documents", "embeddings")
     )

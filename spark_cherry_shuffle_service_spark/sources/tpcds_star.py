@@ -1479,11 +1479,10 @@ def gen_web_returns(base: DataFrame) -> DataFrame:
 # Orchestration
 # --------------------------------------------------------------------------
 #: Validated (sf_dir, lineitem mtime) -> manifest. register_star_views is
-#: called inside every TPC-DS builder, and without this memo each call
-#: re-ran three count() actions just to re-check an unchanged manifest —
-#: ~78+ extra Spark jobs per compare/bench sweep (ADVICE r8). Keyed on the
-#: source lineitem's mtime so a driver regeneration still invalidates,
-#: same convention as bpe.py's _TRAIN_MEMO.
+#: called inside every TPC-DS builder; without this memo each call would
+#: re-read three source footers and the manifest just to re-check an
+#: unchanged star. Keyed on the source lineitem's mtime so regenerated
+#: fixtures still invalidate, same convention as bpe.py's _TRAIN_MEMO.
 _STAR_MEMO: dict[tuple[str, float], dict] = {}
 
 #: Per-session star-table plan memo: (star path, table) -> (manifest
@@ -1504,14 +1503,11 @@ def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict
         memo_key = None
     if not force and memo_key is not None and memo_key in _STAR_MEMO:
         return _STAR_MEMO[memo_key]
-    from spark_cherry_shuffle_service_spark.sources.catalog import table
+    from spark_cherry_shuffle_service_spark.sources.catalog import parquet_rows, table
 
-    lineitem = table(spark, sf_dir, "lineitem")
-    cust = table(spark, sf_dir, "customer")
-    part = table(spark, sf_dir, "part")
-    n_lines = lineitem.count()
-    n_cust = cust.count()
-    n_part = part.count()
+    n_lines, n_cust, n_part = (
+        parquet_rows(os.path.join(sf_dir, f"{t}.parquet")) for t in ("lineitem", "customer", "part")
+    )
     want = {
         "version": _GENERATOR_VERSION,
         "sf_dir": sf_dir,
@@ -1542,6 +1538,9 @@ def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict
             )
     os.makedirs(out_dir, exist_ok=True)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    lineitem = table(spark, sf_dir, "lineitem")
+    cust = table(spark, sf_dir, "customer")
+    part = table(spark, sf_dir, "part")
     par = spark.sparkContext.defaultParallelism
     # Fact scan parallelism (VERDICT r11 item 1 / guide §6): these files are
     # written single-row-group, so the FILE COUNT is the scan parallelism
@@ -1590,7 +1589,7 @@ def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict
     for name, (df, nfiles) in frames.items():
         path = os.path.join(out_dir, f"{name}.parquet")
         df.coalesce(nfiles).write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        counts[name] = parquet_rows(path)
     # v9: each cohort slot line lands in all three sales channels, so the
     # channel partition of lineitem carries 2 extra fact rows per slot —
     # recorded for the invariant test.
@@ -1609,14 +1608,14 @@ def register_star_views(spark: SparkSession, sf_dir: str, force: bool = False) -
     star dir."""
     generate_star(spark, sf_dir, force=force)
     out = star_dir(sf_dir)
-    # Per-build re-reads of 24 star tables cost ~50-100 ms of driver time
-    # apiece (relation resolution + footer schema). Memoize the plan per
+    # Per-build re-reads of 24 star tables cost driver time apiece
+    # (file listing + relation resolution). Memoize the plan per
     # (session, star path, manifest mtime) — regeneration rewrites the
     # manifest, so a stale memo cannot survive it — and route registration
     # through ensure_view so warm rebuilds skip the catalog round-trips
     # entirely (and a TPC-H build overwriting the shared `customer` name
     # still forces exactly that view to re-register).
-    from spark_cherry_shuffle_service_spark.sources.catalog import ensure_view
+    from spark_cherry_shuffle_service_spark.sources.catalog import ensure_view, read_parquet
 
     try:
         mtime = os.path.getmtime(os.path.join(out, MANIFEST))
@@ -1629,7 +1628,7 @@ def register_star_views(spark: SparkSession, sf_dir: str, force: bool = False) -
         if hit is not None and hit[0] == mtime:
             df = hit[1]
         else:
-            df = spark.read.parquet(os.path.join(out, f"{name}.parquet"))
+            df = read_parquet(spark, os.path.join(out, f"{name}.parquet"))
             if cache is not None:
                 cache[(real, name)] = (mtime, df)
         ensure_view(spark, name, df, "star")

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from spark_cherry_shuffle_service_spark.sources.catalog import read_parquet
+
 #: Logical (post-normalization) events schema: what every downstream
 #: operator sees after `normalize_ts`, regardless of the file's physical
 #: `ts` encoding (TIMESTAMP(NANOS)-as-long or timestamp[us] NTZ).
@@ -59,7 +61,7 @@ def events_file_schema(spark: SparkSession, path: str) -> StructType:
     # Legacy conf makes a TIMESTAMP(NANOS) file readable (as long); no-op
     # for µs files.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path).schema
+    return read_parquet(spark, path).schema
 
 
 def normalize_ts(df: DataFrame) -> DataFrame:
@@ -271,7 +273,7 @@ def merge_hourly_partials(batch_df: DataFrame, batch_id: int, target_path: str) 
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     try:
-        existing = spark.read.parquet(target_path)
+        existing = read_parquet(spark, target_path)
     except Exception:  # first batch: nothing to merge yet
         existing = None
     merged = (

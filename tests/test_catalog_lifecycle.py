@@ -1,17 +1,23 @@
 """Per-session catalog state: the table/star plan memos hold one entry per
 table and replace it when the file changes, and ensure_view re-registers a
-shared view name exactly when another family took it over."""
+shared view name exactly when another family took it over. Parquet reads:
+read_parquet's footer schema and parquet_rows' footer counts equal Spark's
+inference and count(), and view registration launches no Spark job."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import shutil
+import uuid
+import weakref
 
+import pytest
 from pyspark.sql import DataFrame
 
 from spark_cherry_shuffle_service_spark.sources import catalog, tpcds_star
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _copy_fixtures(tmp_path) -> str:
@@ -138,3 +144,132 @@ def test_release_persisted_tolerates_stopped_session(spark):
     catalog._PINNED.setdefault(spark, []).append(StoppedSessionFrame())
     assert catalog.release_persisted() == 1
     assert not catalog._PINNED
+
+
+# --- read_parquet: footer schema, footer row counts, zero set-up jobs -------
+
+_PACKAGE = os.path.dirname(os.path.dirname(catalog.__file__))
+_STAR_SF001 = tpcds_star.star_dir(SF_CORRECT)  # the committed star slice
+
+
+def test_parquet_reads_only_through_read_parquet():
+    """Source scan: every `<x>.read[...].parquet(...)` call in the package
+    sits inside catalog.read_parquet, the one read that skips inference."""
+    stray, inside = [], 0
+    for root, _dirs, files in os.walk(_PACKAGE):
+        for fname in (f for f in files if f.endswith(".py")):
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            allowed = {
+                id(node)
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef) and fn.name == "read_parquet"
+                and path == catalog.__file__
+                for node in ast.walk(fn)
+            }
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and ".read." in f".{ast.unparse(node.func.value)}."
+                ):
+                    if id(node) in allowed:
+                        inside += 1
+                    else:
+                        stray.append(f"{os.path.relpath(path, _PACKAGE)}:{node.lineno}")
+    assert stray == [] and inside == 2
+
+
+_PARITY_CASES = (
+    [pytest.param("smoke", t, False, id=f"smoke-{t}") for t in catalog.TABLES]
+    + [pytest.param("star", t, True, id=f"star-{t}") for t in tpcds_star.TPCDS_TABLES]
+    + [pytest.param("written", "orders", True, id="spark-written-orders")]
+)
+
+
+@pytest.mark.parametrize("where,name,footer", _PARITY_CASES)
+def test_read_parquet_matches_inference(spark, tmp_path, where, name, footer):
+    """Footer schema (nullability included) and footer row count equal
+    Spark's inference and count(); Spark-written files take the footer
+    path, the smoke fixtures (written by pyarrow) fall back to inference."""
+    if where == "written":
+        path = str(tmp_path / f"{name}.parquet")
+        spark.read.parquet(f"{SF_SMOKE}/{name}.parquet").write.parquet(path)
+    else:
+        path = os.path.join(SF_SMOKE if where == "smoke" else _STAR_SF001, f"{name}.parquet")
+    assert (catalog._footer_schema(spark, path) is not None) == footer
+    inferred = spark.read.parquet(path)
+    assert catalog.read_parquet(spark, path).schema == inferred.schema
+    assert catalog.parquet_rows(path) == inferred.count()
+
+
+def test_read_parquet_falls_back_under_merge_schema(spark, tmp_path):
+    """With mergeSchema on, Spark unions every footer's schema; one footer
+    cannot give that, so read_parquet infers like spark.read.parquet."""
+    out = str(tmp_path / "t.parquet")
+    spark.range(3).selectExpr("id AS a").write.parquet(out)
+    spark.range(2).selectExpr("id AS a", "id AS b").write.mode("append").parquet(out)
+    assert catalog._footer_schema(spark, out) is not None
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert catalog._footer_schema(spark, out) is None
+        merged = catalog.read_parquet(spark, out).schema
+        assert merged == spark.read.parquet(out).schema and merged.names == ["a", "b"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_read_parquet_falls_back_without_spark_footer_key(spark, tmp_path):
+    """A footer with no Spark row schema (here: written by pyarrow) gets
+    Spark's own inference, and so does a path that does not exist."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "arrow.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, None], pa.int32()), "s": ["x", "y"]}), path)
+    assert catalog._footer_schema(spark, path) is None
+    assert catalog.read_parquet(spark, path).schema == spark.read.parquet(path).schema
+    assert catalog.parquet_rows(path) == 2
+    assert catalog._footer_schema(spark, str(tmp_path / "missing.parquet")) is None
+
+
+def _group_jobs(spark, fn) -> list[int]:
+    """Job ids `fn()` launches, attributed through a fresh job group."""
+    sc = spark.sparkContext
+    group = f"no-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_register_star_views_launches_no_jobs(spark, monkeypatch):
+    """With both star memos empty, validating the manifest (footer row
+    counts) and reading all 24 tables (footer schemas) runs no Spark job."""
+    tpcds_star.generate_star(spark, SF_SMOKE)  # the star exists before timing
+    monkeypatch.setattr(tpcds_star, "_STAR_MEMO", {})
+    monkeypatch.setattr(tpcds_star, "_STAR_READ_MEMO", weakref.WeakKeyDictionary())
+    assert _group_jobs(spark, lambda: tpcds_star.register_star_views(spark, SF_SMOKE)) == []
+    assert len(tpcds_star._STAR_READ_MEMO[spark]) == len(tpcds_star.TPCDS_TABLES)
+
+
+def test_register_views_launches_no_jobs_on_spark_written_fixtures(spark, tmp_path):
+    """register_views over a Spark-written copy of the fixture set: ten
+    views, zero jobs (the smoke fixtures themselves are not Spark-written
+    and keep inference)."""
+    sf_dir = str(tmp_path / "sf0.001")
+    for t in catalog.TABLES:
+        spark.read.parquet(f"{SF_SMOKE}/{t}.parquet").write.parquet(f"{sf_dir}/{t}.parquet")
+    try:
+        views: dict = {}
+        jobs = _group_jobs(spark, lambda: views.update(catalog.register_views(spark, sf_dir)))
+        assert jobs == [] and sorted(views) == sorted(catalog.TABLES)
+    finally:
+        memo = catalog._TABLE_MEMO[spark]
+        for t in catalog.TABLES:
+            memo.pop(os.path.realpath(f"{sf_dir}/{t}.parquet"), None)
+        catalog.register_views(spark, SF_SMOKE)  # restore the smoke views

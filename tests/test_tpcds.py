@@ -8,6 +8,7 @@ oracle up at sf0.01) plus the committed two-SF compare artifacts.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -54,6 +55,21 @@ def test_texts_are_verbatim(qname):
     with open(ref_sql_path(qname)) as fh:
         ref = fh.read()
     assert TPCDS_TEXTS[qname].strip("\n") == ref.strip("\n")
+
+
+def test_texts_match_committed_sha256():
+    """In-repo anchor for the verbatim check above, which needs the
+    reference checkout: the sha256 of every text (same outer-newline
+    normalization), pinned when the texts last changed and were compared
+    byte-for-byte with the reference files. An edit to any text, or an
+    added or dropped query, fails here with no reference mount."""
+    with open(os.path.join(os.path.dirname(__file__), "tpcds_text_sha256.json")) as fh:
+        pinned = json.load(fh)
+    have = {
+        q: hashlib.sha256(text.strip("\n").encode()).hexdigest()
+        for q, text in TPCDS_TEXTS.items()
+    }
+    assert have == pinned
 
 
 @pytest.mark.parametrize("qname", sorted(TPCDS_TEXTS))

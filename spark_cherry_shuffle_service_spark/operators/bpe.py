@@ -39,6 +39,8 @@ rows-only by the grading driver.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -149,17 +151,16 @@ def _bpe_oracle_py(con, sf_dir: str):
     return ["step", "left", "right", "merged", "pair_cnt"], _train_py(_duck_word_counts(con))
 
 
-#: Merge-table memo keyed by (sf_dir, documents-file mtime): the merge
-#: table is a pure deterministic function of the corpus, so text_bpe_apply
-#: reuses text_bpe_train's result instead of paying the 8-round training
-#: loop twice per suite run (ADVICE r7). The mtime key invalidates the memo
-#: if a generated fixture dir is rewritten in-process (genscale --force).
-_TRAIN_MEMO: dict[tuple[str, float], list[tuple[int, str, str, str, int]]] = {}
+#: Merge-table memo: realpath(sf_dir) -> (documents-file mtime, merges).
+#: The merge table is a pure deterministic function of the corpus, so
+#: text_bpe_apply reuses text_bpe_train's result instead of paying the
+#: 8-round training loop twice per suite run (ADVICE r7). A rewritten
+#: fixture dir (new mtime, e.g. genscale --force) replaces its entry, so
+#: the memo holds one entry per fixture dir.
+_TRAIN_MEMO: dict[str, tuple[float, list[tuple[int, str, str, str, int]]]] = {}
 
 
 def _docs_mtime(sf_dir: str) -> float:
-    import os
-
     path = os.path.join(sf_dir, "documents.parquet")
     try:
         return os.path.getmtime(path)
@@ -173,10 +174,10 @@ def _train(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, i
     text_bpe_train (which tabulates it) and text_bpe_apply (which enters
     it as fold literals) can share it. Memoized per corpus (see
     _TRAIN_MEMO)."""
-    memo_key = (sf_dir, _docs_mtime(sf_dir))
-    cached = _TRAIN_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
+    real, mtime = os.path.realpath(sf_dir), _docs_mtime(sf_dir)
+    hit = _TRAIN_MEMO.get(real)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
     par = spark.sparkContext.defaultParallelism
     docs = table(spark, sf_dir, "documents").repartition(par, "doc_id")
     words = docs.select(F.explode(tokens(F.col("text"))).alias("w")).filter(F.length("w") > 0)
@@ -201,7 +202,7 @@ def _train(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, i
         left, right, pc = top[0]["l"], top[0]["r"], int(top[0]["pc"])
         merges.append((step_no, left, right, left + right, pc))
         vocab = vocab.select(merge_pair(F.col("syms"), left, right).alias("syms"), "cnt").transform(pin)
-    _TRAIN_MEMO[memo_key] = merges
+    _TRAIN_MEMO[real] = (mtime, merges)
     return merges
 
 

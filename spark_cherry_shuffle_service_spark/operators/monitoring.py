@@ -23,11 +23,8 @@ Determinism notes (CLAUDE.md conventions):
 Scale: every window partitions by the 5-value event_type vocabulary with
 (ts, event_id) unique tiebreaks. Per-type partitions are the one skew
 concern: at 100 TB a single event_type's ordered scan is a single-task
-sort, so the CUSUM/peak windows would be range-partitioned by (type, day)
-with per-day carry-in offsets (the same decomposition prefix sums admit:
-S over a day = day-local prefix + carried total). The fixture-scale
-implementation keeps the direct window; the decomposition is plan-
-compatible because everything is prefix-sum algebra.
+sort. Prefix sums admit a (type, day) decomposition with per-day carry-in
+offsets; events_cusum's docstring says why it is not used.
 """
 
 from __future__ import annotations
@@ -38,7 +35,7 @@ from pyspark.sql import functions as F
 from spark_cherry_shuffle_service_spark.functions.aggregates import davg, dsum, money
 from spark_cherry_shuffle_service_spark.plans.oracle import davg_sql, dsum_sql
 from spark_cherry_shuffle_service_spark.plans.registry import query
-from spark_cherry_shuffle_service_spark.sources.catalog import table, table_bytes
+from spark_cherry_shuffle_service_spark.sources.catalog import table
 
 _CUSUM_H = "500.000000"  # alarm threshold, exact decimal literal
 
@@ -79,18 +76,11 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     S_i = max(0, S_{i-1} + (x_i - mu)) via the closed form
     S_i = P_i - min(0, min_{j<=i} P_j); alarms where S_i > H.
 
-    Input-size-adaptive (the agg_percentiles precedent): a window
-    partitioned by the 5-value type vocabulary is a 5-task sort at ANY
-    scale — at 100 TB one event_type's ordered scan is a single straggler
-    (guide §2.5). Prefix sums are associative, so above the threshold the
-    window splits per (event_type, day) with exact-decimal day carry-ins;
-    below it the direct window's lower fixed plan cost wins (interleaved
-    A/B at sf0.1: direct best 1.19-1.39 s vs decomposed 1.34-2.07 s —
-    the day table costs a second window pass over the rows). Both
-    branches are bit-identical (exact DECIMAL on 1e-6 multiples; pinned
-    by tests/test_scale_paths.py::
-    test_events_cusum_day_decomposition_bit_identical). Unknown input
-    size chooses the scale-safe decomposed path.
+    One (event_type) sort shared by two window passes. A per-(type, day)
+    decomposition with exact-decimal day carry-ins, meant to split each
+    type's single-task sort at scale, was built, lost every interleaved A/B
+    to this form (sf0.1 and ~sf1, wall and executor CPU) and was removed
+    (SCALE.md §Branch and memo ledger); the code is at 6ad153d.
     """
     ev = table(spark, sf_dir, "events")
     mu = ev.groupBy("event_type").agg(
@@ -98,113 +88,35 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = F.lit(_CUSUM_H).cast("decimal(18,6)")
     zero = F.lit(0).cast("decimal(18,6)")
-    max_direct_bytes = int(
-        spark.conf.get("spark.cherry.cusum.directWindowMaxBytes", str(64 * 1024 * 1024))
-    )
-    nbytes = table_bytes(sf_dir, "events")
-
-    def _summarize(s: DataFrame) -> DataFrame:
-        return (
-            s.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.when(F.col("cusum") > h, 1).otherwise(0)).alias("n_alarms"),
-                # Micro-unit BIGINT, not CAST(AS DOUBLE): the engines'
-                # decimal->double conversions differ by 1 ulp on wide
-                # decimals (observed 3064.89035); integer fixed-point has
-                # no conversion at all.
-                (F.max("cusum") * 1000000).cast("bigint").alias("peak_cusum_micros"),
-            )
-            .orderBy("event_type")
-        )
-
-    if nbytes is not None and nbytes <= max_direct_bytes:
-        # Direct form: one (event_type) sort shared by two window passes.
-        dev = ev.join(F.broadcast(mu), "event_type").select(
-            "event_type",
-            "ts",
-            "event_id",
-            (money(F.col("value")) - F.col("mu")).alias("dev"),
-        )
-        w = (
-            Window.partitionBy("event_type")
-            .orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        pre = dev.select("event_type", "ts", "event_id", F.sum("dev").over(w).alias("p"))
-        s = pre.select(
-            "event_type",
-            (F.col("p") - F.least(F.min("p").over(w), zero)).alias("cusum"),
-        )
-        return _summarize(s)
-
-    # (event_type, day) carry-in decomposition: the row-level sort runs over
-    # |types| x |days| partitions, and the day-level carry-ins (C_d = prefix
-    # of day totals, G_d = running min of the carried day-min prefixes)
-    # come from a calendar-bounded day table.
     dev = ev.join(F.broadcast(mu), "event_type").select(
         "event_type",
         "ts",
         "event_id",
-        F.to_date("ts").alias("d"),
         (money(F.col("value")) - F.col("mu")).alias("dev"),
     )
-    wd = (
-        Window.partitionBy("event_type", "d")
+    w = (
+        Window.partitionBy("event_type")
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # Two window passes over ONE (event_type, d, ts, event_id) sort: local
-    # prefix sum, then running min of the prefix — Catalyst reuses the sort.
-    pre = dev.select(
-        "event_type", "d", "ts", "event_id", "dev", F.sum("dev").over(wd).alias("lp")
-    )
-    loc = pre.select("event_type", "d", "lp", F.min("lp").over(wd).alias("lm"))
-    # Day-level carry table: <= |types| x |calendar days| rows (time-
-    # bounded, not SF-bounded — the daily_gapfill/rolling_dau spine
-    # precedent), so broadcasting it back is policy-compliant. The pre
-    # subtree appears twice in the tree; its exchange is canonically
-    # identical so the shuffle is reused at runtime — the duplicate cost
-    # is one extra in-partition sort+window, paid for |types|-to-
-    # |types|x|days| sort parallelism.
-    day = pre.groupBy("event_type", "d").agg(
-        F.sum("dev").alias("t"), F.min("lp").alias("m")
-    )
-    wday_excl = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    day1 = day.select(
+    pre = dev.select("event_type", "ts", "event_id", F.sum("dev").over(w).alias("p"))
+    s = pre.select(
         "event_type",
-        "d",
-        "m",
-        F.coalesce(F.sum("t").over(wday_excl), zero).alias("c"),
+        (F.col("p") - F.least(F.min("p").over(w), zero)).alias("cusum"),
     )
-    carry = day1.select(
-        "event_type",
-        "d",
-        "c",
-        # Running min of the carried day-min prefixes; NULL on each type's
-        # first day. Two passes over one (event_type, d) sort.
-        F.min(F.col("c") + F.col("m")).over(wday_excl).alias("g"),
+    return (
+        s.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.when(F.col("cusum") > h, 1).otherwise(0)).alias("n_alarms"),
+            # Micro-unit BIGINT, not CAST(AS DOUBLE): the engines'
+            # decimal->double conversions differ by 1 ulp on wide
+            # decimals (observed 3064.89035); integer fixed-point has
+            # no conversion at all.
+            (F.max("cusum") * 1000000).cast("bigint").alias("peak_cusum_micros"),
+        )
+        .orderBy("event_type")
     )
-    s = loc.join(F.broadcast(carry), ["event_type", "d"]).select(
-        "event_type",
-        (
-            (F.col("c") + F.col("lp"))
-            - F.least(
-                # least() skips NULL (first day: g IS NULL) in both engines;
-                # the coalesce keeps the intent explicit.
-                F.coalesce(
-                    F.least(F.col("g"), F.col("c") + F.col("lm")),
-                    F.col("c") + F.col("lm"),
-                ),
-                zero,
-            )
-        ).alias("cusum"),
-    )
-    return _summarize(s)
 
 
 # Benford expected shares log10(1+1/d), hardcoded in basis points so both

@@ -217,6 +217,12 @@ def agg_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production path is approx_percentile (t-digest, single pass, mergeable);
 # this query pins the exact semantics the approximation is judged against.
 # ---------------------------------------------------------------------------
+#: agg_percentiles runs the in-map exact `percentile` at or below this many
+#: lineitem bytes and the cum-count form above it (SCALE.md §Branch and
+#: memo ledger): sf0.1's 11 MB input sits below it, ~sf1's 110 MB above.
+_PERCENTILE_MAP_MAX_BYTES = 64 * 1024 * 1024
+
+
 @query(
     "agg_percentiles",
     oracle="""
@@ -254,11 +260,8 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute bit-identical results against the SAME unchanged oracle
     # (compare green at sf0.01 / sf0.1 / ~sf1 on both forms —
     # OPTIMIZATION_r12.md). Unknown input size chooses the scale-safe path.
-    max_map_bytes = int(
-        spark.conf.get("spark.cherry.percentile.exactMapMaxBytes", str(64 * 1024 * 1024))
-    )
     nbytes = table_bytes(sf_dir, "lineitem")
-    if nbytes is not None and nbytes <= max_map_bytes:
+    if nbytes is not None and nbytes <= _PERCENTILE_MAP_MAX_BYTES:
         return (
             spread(
                 table(spark, sf_dir, "lineitem").select(

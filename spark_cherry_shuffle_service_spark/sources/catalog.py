@@ -18,6 +18,8 @@ from __future__ import annotations
 import json
 import os
 import weakref
+from functools import partial
+from typing import Callable
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
@@ -41,19 +43,37 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: Per-session plan memo for `table()` (guide §1.2 "per-task work" at the
-#: driver: plan construction). A parquet read costs driver time (py4j +
-#: file listing + relation resolution, plus a schema-inference job when the
-#: footer holds no Spark schema: see read_parquet), and
-#: builders re-read the same fixture tables on every query construction —
-#: measured at ~25% of the headline bench's wall clock (OPTIMIZATION_r12.md
-#: item 4). DataFrames are immutable plans, so reusing one is pure metadata
-#: caching — every action still computes from the parquet input. One entry
-#: per (session, resolved path) holds (file mtime, plan); a regenerated
-#: fixture (new mtime) replaces its entry, so the memo never outgrows the
-#: table set. Sessions are held weakly so a stopped session's plans are
-#: collectable.
+#: Per-session plan memo for `table()` and the TPC-DS star reads
+#: (tpcds_star.register_star_views). A parquet read costs driver time (py4j
+#: + file listing + relation resolution, plus a schema-inference job when
+#: the footer holds no Spark schema: see read_parquet), and builders re-read
+#: the same tables on every query construction: with the memo cleared,
+#: register_views takes ~1.1 s and 10 inference jobs at sf0.1, and the
+#: star's 24 reads ~0.7 s (SCALE.md §Branch and memo ledger). DataFrames
+#: are immutable plans, so reusing one is pure metadata caching — every
+#: action still computes from the parquet input. One entry per (session,
+#: resolved path) holds (path mtime, plan); a regenerated table (new mtime;
+#: a `mode("overwrite")` directory is recreated) replaces its entry, so the
+#: memo never outgrows the table set. Sessions are held weakly so a stopped
+#: session's plans are collectable.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _memo_read(spark: SparkSession, path: str, read: Callable[[], DataFrame]) -> DataFrame:
+    """`read()`'s plan for `path`, memoized in _TABLE_MEMO per session and
+    path mtime. A path that cannot be statted reads uncached (the read
+    raises for a missing path)."""
+    try:
+        real, mtime = os.path.realpath(path), os.path.getmtime(path)
+    except OSError:
+        return read()
+    cache = _TABLE_MEMO.setdefault(spark, {})
+    hit = cache.get(real)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
+    df = read()
+    cache[real] = (mtime, df)
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -66,18 +86,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        real, mtime = os.path.realpath(path), os.path.getmtime(path)
-        cache = _TABLE_MEMO.setdefault(spark, {})
-    except (OSError, TypeError):
-        return _read_table(spark, sf_dir, name)  # unreadable path raises there; never cached
-    hit = cache.get(real)
-    if hit is not None and hit[0] == mtime:
-        return hit[1]
-    df = _read_table(spark, sf_dir, name)
-    cache[real] = (mtime, df)
-    return df
+    return _memo_read(spark, f"{sf_dir}/{name}.parquet", partial(_read_table, spark, sf_dir, name))
 
 
 #: Footer key under which Spark's parquet writer stores the row schema as
@@ -189,12 +198,7 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     # result per (object, cols, p) — pure lazy-plan reuse, no data is
     # cached. Frames not from the table memo miss harmlessly (WeakKey:
     # entries die with their source frame).
-    memo = _SPREAD_MEMO.get(df)
-    if memo is None:
-        try:
-            memo = _SPREAD_MEMO.setdefault(df, {})
-        except TypeError:
-            memo = {}
+    memo = _SPREAD_MEMO.setdefault(df, {})
     key = (cols, p)
     hit = memo.get(key)
     if hit is not None:
@@ -280,11 +284,7 @@ _VIEW_OWNERS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyD
 def ensure_view(spark: SparkSession, name: str, df: DataFrame, tag: str) -> None:
     """createOrReplaceTempView(name → df), skipped when `name` is already
     registered to this exact (tag, plan object) in this session."""
-    try:
-        owners = _VIEW_OWNERS.setdefault(spark, {})
-    except TypeError:
-        df.createOrReplaceTempView(name)
-        return
+    owners = _VIEW_OWNERS.setdefault(spark, {})
     prev = owners.get(name)
     if prev is not None and prev[0] == tag and prev[1] is df:
         return

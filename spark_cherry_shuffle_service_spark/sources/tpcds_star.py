@@ -46,7 +46,7 @@ from __future__ import annotations
 import json
 import os
 import warnings
-import weakref
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1478,31 +1478,12 @@ def gen_web_returns(base: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Orchestration
 # --------------------------------------------------------------------------
-#: Validated (sf_dir, lineitem mtime) -> manifest. register_star_views is
-#: called inside every TPC-DS builder; without this memo each call would
-#: re-read three source footers and the manifest just to re-check an
-#: unchanged star. Keyed on the source lineitem's mtime so regenerated
-#: fixtures still invalidate, same convention as bpe.py's _TRAIN_MEMO.
-_STAR_MEMO: dict[tuple[str, float], dict] = {}
-
-#: Per-session star-table plan memo: (star path, table) -> (manifest
-#: mtime, plan), replaced on a new mtime — the register_star_views
-#: analogue of catalog._TABLE_MEMO.
-_STAR_READ_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
-
-
 def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
     """Write the 24-table star slice for `sf_dir`'s fixtures; idempotent
     via manifest (same shape as sources/genscale.py). Facts are multi-file
     parquet dirs (scan parallelism); dims are single-file."""
     out_dir = star_dir(sf_dir)
     manifest_path = os.path.join(out_dir, MANIFEST)
-    try:
-        memo_key = (os.path.realpath(sf_dir), os.path.getmtime(os.path.join(sf_dir, "lineitem.parquet")))
-    except OSError:
-        memo_key = None
-    if not force and memo_key is not None and memo_key in _STAR_MEMO:
-        return _STAR_MEMO[memo_key]
     from spark_cherry_shuffle_service_spark.sources.catalog import parquet_rows, table
 
     n_lines, n_cust, n_part = (
@@ -1519,8 +1500,6 @@ def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict
         with open(manifest_path) as fh:
             have = json.load(fh)
         if {k: have.get(k) for k in want} == want:
-            if memo_key is not None:
-                _STAR_MEMO[memo_key] = have
             return have
         # Basename-collision guard (ADVICE r8): star_dir keys by basename,
         # so a DIFFERENT fixture dir that happens to share one (e.g. any
@@ -1597,8 +1576,6 @@ def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict
     manifest = dict(want, row_counts=counts, n_slot_lines=n_slots)
     with open(manifest_path, "w") as fh:
         json.dump(manifest, fh, indent=1)
-    if memo_key is not None:
-        _STAR_MEMO[memo_key] = manifest
     return manifest
 
 
@@ -1608,28 +1585,15 @@ def register_star_views(spark: SparkSession, sf_dir: str, force: bool = False) -
     star dir."""
     generate_star(spark, sf_dir, force=force)
     out = star_dir(sf_dir)
-    # Per-build re-reads of 24 star tables cost driver time apiece
-    # (file listing + relation resolution). Memoize the plan per
-    # (session, star path, manifest mtime) — regeneration rewrites the
-    # manifest, so a stale memo cannot survive it — and route registration
-    # through ensure_view so warm rebuilds skip the catalog round-trips
-    # entirely (and a TPC-H build overwriting the shared `customer` name
-    # still forces exactly that view to re-register).
-    from spark_cherry_shuffle_service_spark.sources.catalog import ensure_view, read_parquet
+    # Plans come from catalog's table memo, keyed by each table path's
+    # mtime (a regenerated star rewrites every path), and registration goes
+    # through ensure_view, so warm rebuilds make no catalog call while a
+    # TPC-H build overwriting the shared `customer` name still forces
+    # exactly that view to re-register.
+    from spark_cherry_shuffle_service_spark.sources.catalog import _memo_read, ensure_view, read_parquet
 
-    try:
-        mtime = os.path.getmtime(os.path.join(out, MANIFEST))
-        cache = _STAR_READ_MEMO.setdefault(spark, {})
-    except (OSError, TypeError):
-        mtime, cache = None, None
-    real = os.path.realpath(out)
     for name in TPCDS_TABLES:
-        hit = cache.get((real, name)) if cache is not None else None
-        if hit is not None and hit[0] == mtime:
-            df = hit[1]
-        else:
-            df = read_parquet(spark, os.path.join(out, f"{name}.parquet"))
-            if cache is not None:
-                cache[(real, name)] = (mtime, df)
+        path = os.path.join(out, f"{name}.parquet")
+        df = _memo_read(spark, path, partial(read_parquet, spark, path))
         ensure_view(spark, name, df, "star")
     return out

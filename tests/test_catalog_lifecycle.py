@@ -1,6 +1,8 @@
-"""Per-session catalog state: the table/star plan memos hold one entry per
-table and replace it when the file changes, and ensure_view re-registers a
-shared view name exactly when another family took it over. Parquet reads:
+"""Per-session catalog state: the plan memo (fixture and star reads) and
+bpe's merge-table memo hold one entry per table or corpus and replace it
+when the file changes, ensure_view re-registers a shared view name exactly
+when another family took it over, and every module-level memo or size gate
+has a row in SCALE.md's branch and memo ledger. Parquet reads:
 read_parquet's footer schema and parquet_rows' footer counts equal Spark's
 inference and count(), and view registration launches no Spark job."""
 
@@ -11,7 +13,6 @@ import json
 import os
 import shutil
 import uuid
-import weakref
 
 import pytest
 from pyspark.sql import DataFrame
@@ -28,6 +29,11 @@ def _copy_fixtures(tmp_path) -> str:
     return sf_dir
 
 
+def _bump(paths, t0: float, bump: int) -> None:
+    for path in paths:
+        os.utime(path, (t0 + bump, t0 + bump))
+
+
 def test_table_memo_replaces_entry_on_new_mtime(spark, tmp_path):
     """Two mtime bumps: each re-reads every table, the fresh plan is the one
     returned, and the memo keeps exactly one entry per table."""
@@ -40,8 +46,7 @@ def test_table_memo_replaces_entry_on_new_mtime(spark, tmp_path):
         assert all(again[t] is prev[t] for t in catalog.TABLES)
         t0 = os.path.getmtime(paths["orders"])
         for bump in (10, 20):
-            for path in paths.values():
-                os.utime(path, (t0 + bump, t0 + bump))
+            _bump(paths.values(), t0, bump)
             fresh = catalog.load_tables(spark, sf_dir)
             for t, path in paths.items():
                 assert fresh[t] is not prev[t], t
@@ -55,8 +60,9 @@ def test_table_memo_replaces_entry_on_new_mtime(spark, tmp_path):
 
 
 def test_star_read_memo_replaces_entry_on_new_mtime(spark, tmp_path, monkeypatch):
-    """Same for the star: a new manifest mtime replaces each table's entry,
-    and the re-registered view holds the fresh plan."""
+    """Same for the star, whose 24 reads share the plan memo: bumping their
+    paths replaces each table's entry, and the re-registered view holds the
+    fresh plan."""
     tpcds_star.generate_star(spark, SF_SMOKE)  # the source slice to copy
     src = tpcds_star.star_dir(SF_SMOKE)
     sf_dir = _copy_fixtures(tmp_path)
@@ -68,27 +74,51 @@ def test_star_read_memo_replaces_entry_on_new_mtime(spark, tmp_path, monkeypatch
         have = json.load(fh)
     with open(manifest, "w") as fh:
         json.dump(dict(have, sf_dir=sf_dir), fh)
-
-    real = os.path.realpath(tpcds_star.register_star_views(spark, sf_dir))
-    memo = tpcds_star._STAR_READ_MEMO[spark]
+    star = {t: os.path.realpath(f"{out}/{t}.parquet") for t in tpcds_star.TPCDS_TABLES}
+    tpcds_star.register_star_views(spark, sf_dir)
+    memo = catalog._TABLE_MEMO[spark]
     try:
-        prev = memo[(real, "store_sales")][1]
-        t0 = os.path.getmtime(manifest)
+        prev = {t: memo[path][1] for t, path in star.items()}
+        t0 = os.path.getmtime(star["store_sales"])
         for bump in (10, 20):
-            os.utime(manifest, (t0 + bump, t0 + bump))
+            _bump(star.values(), t0, bump)
             tpcds_star.register_star_views(spark, sf_dir)
-            mine = sorted(k for k in memo if k[0] == real)
-            assert mine == sorted((real, t) for t in tpcds_star.TPCDS_TABLES)
-            mtime, fresh = memo[(real, "store_sales")]
-            assert mtime == t0 + bump and fresh is not prev
-            owner = catalog._VIEW_OWNERS[spark]["store_sales"]
-            assert owner[0] == "star" and owner[1] is fresh
-            prev = fresh
+            assert len([k for k in memo if k.startswith(os.path.realpath(out) + os.sep)]) == len(star)
+            owners = catalog._VIEW_OWNERS[spark]
+            for t, path in star.items():
+                mtime, fresh = memo[path]
+                assert mtime == t0 + bump and fresh is not prev[t], t
+                assert owners[t][0] == "star" and owners[t][1] is fresh, t
+            prev = {t: memo[path][1] for t, path in star.items()}
     finally:
-        for k in [k for k in memo if k[0] == real]:
-            memo.pop(k)
+        for path in star.values():
+            memo.pop(path, None)
         monkeypatch.undo()
         tpcds_star.register_star_views(spark, SF_SMOKE)  # restore the smoke star views
+
+
+def test_train_memo_replaces_entry_on_new_mtime(spark, tmp_path):
+    """bpe's merge-table memo holds one entry per fixture dir: retraining
+    after a documents mtime bump replaces it."""
+    from spark_cherry_shuffle_service_spark.operators import bpe
+
+    sf_dir = _copy_fixtures(tmp_path)
+    real, docs = os.path.realpath(sf_dir), f"{sf_dir}/documents.parquet"
+    try:
+        merges = bpe._train(spark, sf_dir)
+        t0 = os.path.getmtime(docs)
+        assert bpe._TRAIN_MEMO[real] == (t0, merges)
+        assert bpe._train(spark, sf_dir) is merges  # an unchanged corpus hits the memo
+        os.utime(docs, (t0 + 10, t0 + 10))
+        again = bpe._train(spark, sf_dir)
+        assert again == merges and again is not merges  # retrained on the new mtime
+        assert [k for k in bpe._TRAIN_MEMO if real in str(k)] == [real]
+        assert bpe._TRAIN_MEMO[real] == (t0 + 10, again)
+    finally:
+        bpe._TRAIN_MEMO.pop(real, None)
+        memo = catalog._TABLE_MEMO[spark]
+        for t in catalog.TABLES:
+            memo.pop(os.path.realpath(f"{sf_dir}/{t}.parquet"), None)
 
 
 def test_ensure_view_shared_customer_plain_star_plain(spark, monkeypatch):
@@ -114,7 +144,7 @@ def test_ensure_view_shared_customer_plain_star_plain(spark, monkeypatch):
 
     calls.clear()
     out = tpcds_star.register_star_views(spark, SF_SMOKE)
-    star = tpcds_star._STAR_READ_MEMO[spark][(os.path.realpath(out), "customer")][1]
+    star = catalog._TABLE_MEMO[spark][os.path.realpath(f"{out}/customer.parquet")][1]
     assert "customer" in calls  # the star took the name over from the plain view
     assert resolves_to(star) and "c_customer_sk" in spark.table("customer").columns
 
@@ -182,6 +212,60 @@ def test_parquet_reads_only_through_read_parquet():
     assert stray == [] and inside == 2
 
 
+def _ledger() -> str:
+    """The table of SCALE.md §Branch and memo ledger."""
+    with open(os.path.join(os.path.dirname(_PACKAGE), "SCALE.md")) as fh:
+        section = fh.read().split("## Branch and memo ledger", 1)[1].split("\n## ", 1)[0]
+    return "\n".join(line for line in section.splitlines() if line.startswith("|"))
+
+
+def _is_empty_container(node: ast.expr) -> bool:
+    if isinstance(node, (ast.Dict, ast.List)):
+        return not (node.keys if isinstance(node, ast.Dict) else node.elts)
+    if isinstance(node, ast.Call) and not node.args and not node.keywords:
+        func = ast.unparse(node.func)
+        return func == "set" or func.startswith("weakref.Weak")
+    return False
+
+
+def test_module_state_and_size_gates_have_ledger_rows():
+    """Every module-level name bound to an empty {}, [], set() or
+    weakref.Weak*() (a memo or registry), and every function that picks a
+    plan by table_bytes, is named in the ledger; no spark.cherry.* conf."""
+    ledger = _ledger()
+    missing, knobs = [], []
+    for root, _dirs, files in os.walk(_PACKAGE):
+        for fname in (f for f in files if f.endswith(".py")):
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                src = fh.read()
+            rel = os.path.relpath(path, _PACKAGE)
+            if "spark.cherry." in src:
+                knobs.append(rel)
+            tree = ast.parse(src)
+            names = [
+                ast.unparse(target)
+                for node in tree.body
+                if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None
+                and _is_empty_container(node.value)
+                for target in (node.targets if isinstance(node, ast.Assign) else [node.target])
+            ]
+            names += [
+                fn.name
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef) and fn.name != "table_bytes"
+                and any(
+                    isinstance(c, ast.Call) and ast.unparse(c.func).endswith("table_bytes")
+                    for c in ast.walk(fn)
+                )
+            ]
+            missing += [
+                f"{rel}:{name}" for name in names
+                if f"`{name}`" not in ledger and f"{rel}:{name}" != "plans/registry.py:REGISTRY"
+            ]
+    assert (missing, knobs) == ([], [])
+
+
 _PARITY_CASES = (
     [pytest.param("smoke", t, False, id=f"smoke-{t}") for t in catalog.TABLES]
     + [pytest.param("star", t, True, id=f"star-{t}") for t in tpcds_star.TPCDS_TABLES]
@@ -247,14 +331,17 @@ def _group_jobs(spark, fn) -> list[int]:
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_register_star_views_launches_no_jobs(spark, monkeypatch):
-    """With both star memos empty, validating the manifest (footer row
-    counts) and reading all 24 tables (footer schemas) runs no Spark job."""
+def test_register_star_views_launches_no_jobs(spark):
+    """With the star's memo entries cleared, validating the manifest (footer
+    row counts) and reading all 24 tables (footer schemas) runs no Spark job."""
+    out = tpcds_star.star_dir(SF_SMOKE)
     tpcds_star.generate_star(spark, SF_SMOKE)  # the star exists before timing
-    monkeypatch.setattr(tpcds_star, "_STAR_MEMO", {})
-    monkeypatch.setattr(tpcds_star, "_STAR_READ_MEMO", weakref.WeakKeyDictionary())
+    star = [os.path.realpath(f"{out}/{t}.parquet") for t in tpcds_star.TPCDS_TABLES]
+    memo = catalog._TABLE_MEMO.setdefault(spark, {})
+    for path in star:
+        memo.pop(path, None)
     assert _group_jobs(spark, lambda: tpcds_star.register_star_views(spark, SF_SMOKE)) == []
-    assert len(tpcds_star._STAR_READ_MEMO[spark]) == len(tpcds_star.TPCDS_TABLES)
+    assert all(path in memo for path in star)
 
 
 def test_register_views_launches_no_jobs_on_spark_written_fixtures(spark, tmp_path):

@@ -245,56 +245,3 @@ def test_minhash_signature_hof_matches_explode_groupby(spark):
     joined = hof.alias("a").join(legacy.alias("b"), "doc_id")
     assert joined.count() == n_docs  # same doc set (size(sh) guard holds)
     assert joined.filter(F.expr("a.sig <> b.sig")).count() == 0
-
-
-def test_events_cusum_day_decomposition_bit_identical(spark):
-    """events_cusum's scale branch — the (event_type, day) carry-in
-    decomposition — must be bit-identical to the direct single-partition
-    prefix-sum form: all arithmetic is exact DECIMAL on 1e-6 multiples, so
-    regrouping the prefix sums by day cannot change any output micro-unit.
-    The conf forces the decomposed branch (fixture events are far below the
-    64 MB default threshold, so the builder would otherwise take the direct
-    branch and the comparison would be vacuous)."""
-    from pyspark.sql import Window
-
-    from spark_cherry_shuffle_service_spark.functions.aggregates import davg, money
-    from spark_cherry_shuffle_service_spark.operators.monitoring import _CUSUM_H
-
-    ev = table(spark, SF_CORRECT, "events")
-    mu = ev.groupBy("event_type").agg(
-        F.round(davg(F.col("value"), "mu_d"), 6).cast("decimal(18,6)").alias("mu")
-    )
-    dev = ev.join(F.broadcast(mu), "event_type").select(
-        "event_type", "ts", "event_id", (money(F.col("value")) - F.col("mu")).alias("dev")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = dev.select("event_type", F.sum("dev").over(w).alias("p"), F.min(F.sum("dev").over(w)).over(w).alias("rm"))
-    h = F.lit(_CUSUM_H).cast("decimal(18,6)")
-    legacy = (
-        pre.select(
-            "event_type",
-            (F.col("p") - F.least(F.col("rm"), F.lit(0).cast("decimal(18,6)"))).alias("cusum"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.when(F.col("cusum") > h, 1).otherwise(0)).alias("n_alarms"),
-            (F.max("cusum") * 1000000).cast("bigint").alias("peak_cusum_micros"),
-        )
-        .orderBy("event_type")
-    )
-    spark.conf.set("spark.cherry.cusum.directWindowMaxBytes", "0")
-    try:
-        decomposed = SPECS["events_cusum"].builder(spark, SF_CORRECT)
-        decomposed_rows = [r.asDict() for r in decomposed.collect()]
-    finally:
-        spark.conf.unset("spark.cherry.cusum.directWindowMaxBytes")
-    direct = SPECS["events_cusum"].builder(spark, SF_CORRECT)
-    direct_rows = [r.asDict() for r in direct.collect()]
-    legacy_rows = [r.asDict() for r in legacy.collect()]
-    assert decomposed_rows == legacy_rows
-    assert direct_rows == legacy_rows

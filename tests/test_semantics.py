@@ -356,13 +356,14 @@ def test_sessionize_boundary_parity_with_session_window(spark):
     assert batch_sessions(just_past) == 2
 
 
-def test_agg_percentiles_branches_bit_identical(spark):
-    """agg_percentiles is input-size-adaptive (r12): below
-    spark.cherry.percentile.exactMapMaxBytes it runs Spark's in-map exact
-    `percentile`, above it the count-by-value cum-count form (the only
-    shape that survives 100 TB — bounded memory, no serial map merge).
+def test_agg_percentiles_branches_bit_identical(spark, monkeypatch):
+    """agg_percentiles is input-size-adaptive (r12): at or below
+    relational._PERCENTILE_MAP_MAX_BYTES of lineitem it runs Spark's in-map
+    exact `percentile`, above it the count-by-value cum-count form (the
+    only shape that survives 100 TB — bounded memory, no serial map merge).
     Both branches must produce BIT-identical rows on the same data, so the
     declared query's result is independent of which branch fires."""
+    from spark_cherry_shuffle_service_spark.operators import relational
     from spark_cherry_shuffle_service_spark.plans.registry import all_specs
     from tests.conftest import SF_CORRECT
 
@@ -373,11 +374,7 @@ def test_agg_percentiles_branches_bit_identical(spark):
     def rows(df):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
-    conf_key = "spark.cherry.percentile.exactMapMaxBytes"
     map_form = rows(specs["agg_percentiles"].builder(spark, SF_CORRECT))
-    spark.conf.set(conf_key, "0")  # force the cum-count branch
-    try:
-        cum_form = rows(specs["agg_percentiles"].builder(spark, SF_CORRECT))
-    finally:
-        spark.conf.unset(conf_key)
+    monkeypatch.setattr(relational, "_PERCENTILE_MAP_MAX_BYTES", -1)  # force the cum-count branch
+    cum_form = rows(specs["agg_percentiles"].builder(spark, SF_CORRECT))
     assert map_form == cum_form, (map_form, cum_form)

@@ -145,17 +145,39 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding: the near-dup scale path.
 # ---------------------------------------------------------------------------
+def _band_keys(sig: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, band, bkey) for each row of `sig`: bkey is the md5 of band
+    `band`'s _MH_ROWS signature entries, so the fan-out is exactly
+    _MH_BANDS rows per row, ready for a hash join on the bucket key.
+    Oracle twin: _banded_sql()."""
+    bands = F.transform(
+        F.sequence(F.lit(0), F.lit(_MH_BANDS - 1)),
+        lambda band: F.struct(
+            band.alias("band"),
+            F.md5(F.array_join(F.slice(F.col("sig"), band * _MH_ROWS + 1, _MH_ROWS), "")).alias(
+                "bkey"
+            ),
+        ),
+    )
+    return sig.select(*keep, F.explode(bands).alias("bk")).select(
+        *keep, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
+    )
+
+
+def _banded_sql() -> str:
+    """SQL twin of _band_keys over a `sig(doc_id, sig)` CTE: one UNION ALL
+    branch per band."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {band} AS band,"
+        f" md5(array_to_string(sig[{band * _MH_ROWS + 1}:{band * _MH_ROWS + _MH_ROWS}], '')) AS bkey"
+        " FROM sig"
+        for band in range(_MH_BANDS)
+    )
+
+
 def _minhash_pairs_cte() -> str:
     """Shared WITH-prefix ending in a `dups(doc_a, doc_b, jaccard)` CTE —
     the verified near-dup pair table both minhash queries build on."""
-    band_rows = []
-    for band in range(_MH_BANDS):
-        lo = band * _MH_ROWS + 1
-        hi = lo + _MH_ROWS - 1
-        band_rows.append(
-            f"SELECT doc_id, {band} AS band, md5(array_to_string(sig[{lo}:{hi}], '')) AS bkey FROM sig"
-        )
-    banded = " UNION ALL ".join(band_rows)
     return f"""
     WITH toks AS (
       SELECT doc_id, {_SQL_SHINGLES3} AS sh
@@ -165,7 +187,7 @@ def _minhash_pairs_cte() -> str:
              list_transform(generate_series(0, {_MH_N - 1}),
                s -> list_min(list_transform(sh, x -> md5(s::VARCHAR || '|' || x)))) AS sig
       FROM toks
-    ), banded AS ( {banded} ),
+    ), banded AS ( {_banded_sql()} ),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
@@ -220,22 +242,7 @@ def _minhash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = docs.filter(F.size("sh") > 0).select(
         "doc_id", minhash_signature(F.col("sh"), _MH_N).alias("sig")
     )
-    # Bands: explode each signature into (band, band_key) — fan-out is
-    # exactly _MH_BANDS rows per doc, then a hash join on the bucket key.
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_BANDS - 1)),
-                lambda band: F.struct(
-                    band.alias("band"),
-                    F.md5(
-                        F.array_join(F.slice(F.col("sig"), band * _MH_ROWS + 1, _MH_ROWS), "")
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    banded = _band_keys(sig, "doc_id")
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(
@@ -274,41 +281,42 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTER_ROUNDS = 3
 
 
-def _cluster_oracle() -> str:
-    # Min-label propagation over the near-dup pair graph, unrolled to a
-    # fixed round count (same deterministic-round convention as
-    # graph.py::_cc_oracle — results are stable whether or not the tiny
-    # cluster graphs have converged, and 3 rounds covers any chain the
-    # fixture's planted dups form).
-    parts = [
-        _minhash_pairs_cte(),
-        """, edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM dups
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM dups
-    ), l0 AS (
-      SELECT DISTINCT src AS node, src AS label FROM edges
-    )""",
-    ]
-    for i in range(1, _CLUSTER_ROUNDS + 1):
-        parts.append(
-            f""", l{i} AS (
+def _min_label_rounds(rounds: int) -> str:
+    """`l0 … l{rounds}` CTEs of min-label propagation over a symmetric
+    `edges(src, dst)` CTE: l0 labels every node with its own id; each round
+    a node takes LEAST(own label, MIN of its neighbours' labels). The SQL
+    kernel of graph.py's connected components and of
+    dedup_cluster_canonical; labels after round k are deterministic whether
+    or not the graph has converged."""
+    steps = "".join(
+        f""", l{i} AS (
       SELECT n.node, LEAST(n.label, MIN(m.label)) AS label
       FROM l{i - 1} n
       JOIN edges e ON e.src = n.node
       JOIN l{i - 1} m ON m.node = e.dst
       GROUP BY n.node, n.label
     )"""
-        )
-    parts.append(
-        f"""
+        for i in range(1, rounds + 1)
+    )
+    return f""", l0 AS (
+      SELECT DISTINCT src AS node, src AS label FROM edges
+    ){steps}"""
+
+
+def _cluster_oracle() -> str:
+    # Min-label propagation over the near-dup pair graph, unrolled to a
+    # fixed round count — 3 rounds covers any chain the fixture's planted
+    # dups form.
+    return f"""{_minhash_pairs_cte()}, edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM dups
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM dups
+    ){_min_label_rounds(_CLUSTER_ROUNDS)}
     SELECT node AS doc_id, label AS canonical_id,
            CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS cluster_size,
            CASE WHEN node = label THEN 1 ELSE 0 END AS is_kept
     FROM l{_CLUSTER_ROUNDS}
     """
-    )
-    return "".join(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -710,20 +718,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = docs.filter(F.size("sh") > 0).select(
         "doc_id", minhash_signature(F.col("sh"), _MH_N).alias("sig")
     )
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_BANDS - 1)),
-                lambda band: F.struct(
-                    band.alias("band"),
-                    F.md5(
-                        F.array_join(F.slice(F.col("sig"), band * _MH_ROWS + 1, _MH_ROWS), "")
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    banded = _band_keys(sig, "doc_id")
     existing = banded.filter(F.col("doc_id") % 7 != 0)
     incoming = banded.filter(F.col("doc_id") % 7 == 0)
     cands = (
@@ -771,12 +766,6 @@ _AUDIT_N = 400
 
 
 def _lsh_recall_oracle() -> str:
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {band} AS band,"
-        f" md5(array_to_string(sig[{band * _MH_ROWS + 1}:{band * _MH_ROWS + _MH_ROWS}], '')) AS bkey"
-        " FROM sig"
-        for band in range(_MH_BANDS)
-    )
     return f"""
     WITH ranked AS (
       SELECT doc_id, text,
@@ -795,7 +784,7 @@ def _lsh_recall_oracle() -> str:
              list_transform(generate_series(0, {_MH_N - 1}),
                s -> list_min(list_transform(sh, x -> md5(s::VARCHAR || '|' || x)))) AS sig
       FROM samp
-    ), banded AS ( {band_rows} ),
+    ), banded AS ( {_banded_sql()} ),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
@@ -848,20 +837,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(pin)  # feeds the hits join + its own count
     )
     sig = samp.select("doc_id", minhash_signature(F.col("sh"), _MH_N).alias("sig"))
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_BANDS - 1)),
-                lambda band: F.struct(
-                    band.alias("band"),
-                    F.md5(
-                        F.array_join(F.slice(F.col("sig"), band * _MH_ROWS + 1, _MH_ROWS), "")
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    banded = _band_keys(sig, "doc_id")
     ba, bb = banded.alias("ba"), banded.alias("bb")
     cands = (
         ba.join(

@@ -24,11 +24,86 @@ edge table by src so the per-iteration join is exchange-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_cherry_shuffle_service_spark.operators.dedup import _min_label_rounds
 from spark_cherry_shuffle_service_spark.plans.registry import query
 from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
+
+
+# ---------------------------------------------------------------------------
+# The trade graph, written once per engine. Node encoding: supplier s → 2s,
+# customer c → 2c+1 (disjoint integer namespaces; integers hash/shuffle far
+# cheaper than string ids). Spark: _trade_join / _trade_pairs / _sym_edges.
+# Oracle twins: _pairs_sql / _edges_cte (SQL) and _trade_edges_np (numpy);
+# they never call the Spark helpers, so the differential stays independent.
+# Each builder keeps its own repartition and pin calls.
+# ---------------------------------------------------------------------------
+def _trade_join(spark: SparkSession, sf_dir: str, *li_cols: str) -> DataFrame:
+    """lineitem ⋈ orders on the order key. The single-file fixture scans as
+    ONE partition, so lineitem is repartitioned before the join and edge
+    construction parallelizes (BASELINE.md perf note)."""
+    par = spark.sparkContext.defaultParallelism
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey", *li_cols)
+        .repartition(par)
+    )
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return li.join(orders, li.l_orderkey == orders.o_orderkey)
+
+
+def _trade_nodes() -> list[Column]:
+    """s_node, c_node of a _trade_join row."""
+    return [
+        (2 * F.col("l_suppkey")).alias("s_node"),
+        (2 * F.col("o_custkey") + 1).alias("c_node"),
+    ]
+
+
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (s_node, c_node): one undirected edge per pair that traded."""
+    return _trade_join(spark, sf_dir).select(*_trade_nodes()).distinct()
+
+
+def _pairs_sql(weighted: bool = False) -> str:
+    """SQL twin of _trade_pairs; `weighted` adds graph_sssp_bounded's
+    w = MIN(l_quantity) per pair."""
+    nodes = "2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node"
+    join = "FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+    if weighted:
+        return f"SELECT {nodes}, MIN(CAST(l_quantity AS BIGINT)) AS w {join} GROUP BY 1, 2"
+    return f"SELECT DISTINCT {nodes} {join}"
+
+
+def _edges_cte(weighted: bool = False) -> str:
+    """`WITH pairs, edges(src, dst[, w])` head of every trade-graph SQL
+    oracle: both directions of each pair (SQL twin of _sym_edges)."""
+    w = ", w" if weighted else ""
+    return f"""
+    WITH pairs AS (
+      {_pairs_sql(weighted)}
+    ), edges AS (
+      SELECT s_node AS src, c_node AS dst{w} FROM pairs
+      UNION ALL
+      SELECT c_node AS src, s_node AS dst{w} FROM pairs
+    )"""
+
+
+def _trade_edges_np(con, weighted: bool = False) -> tuple:
+    """numpy twin of _edges_cte: (src, dst[, w]) int64 arrays holding both
+    directions of each pair, for the oracle_py functions."""
+    import numpy as np
+
+    res = con.execute(_pairs_sql(weighted)).fetchnumpy()
+    s = np.asarray(res["s_node"], dtype=np.int64)
+    c = np.asarray(res["c_node"], dtype=np.int64)
+    out = (np.concatenate([s, c]), np.concatenate([c, s]))
+    if weighted:
+        w = np.asarray(res["w"], dtype=np.int64)
+        out += (np.concatenate([w, w]),)
+    return out
 
 
 def _sym_edges(pairs: DataFrame, *extra: str) -> DataFrame:
@@ -60,9 +135,6 @@ _DAMP = 0.85
 
 
 def _oracle() -> str:
-    # Node encoding: supplier s → 2s, customer c → 2c+1 (disjoint integer
-    # namespaces; integers hash/shuffle far cheaper than string ids).
-    #
     # FIXED-POINT ranks (micro-rank units, BIGINT): rank/d ratios are
     # irrational-ish doubles, and quantizing them (ROUND(x, 6)) lands on
     # .5-boundaries where Spark (shortest-decimal HALF_UP) and DuckDB
@@ -72,19 +144,12 @@ def _oracle() -> str:
     # shift vs float PageRank is < 1e-6 per contribution (floor vs round),
     # i.e. inside the quantization the float form already applied.
     parts = [
-        """
-    WITH pairs AS (
-      SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ), deg AS (
+        _edges_cte(),
+        """, deg AS (
       SELECT src, COUNT(*) AS d FROM edges GROUP BY src
     ), r0 AS (
       SELECT src AS node, CAST(1000000 AS BIGINT) AS rank FROM deg
-    )"""
+    )""",
     ]
     for i in range(1, _ITER + 1):
         parts.append(
@@ -121,16 +186,7 @@ def _pagerank_oracle_py(con, sf_dir: str):
     scale by tests/test_graph.py."""
     import numpy as np
 
-    res = con.execute(
-        """
-        SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """
-    ).fetchnumpy()
-    s = np.asarray(res["s_node"], dtype=np.int64)
-    c = np.asarray(res["c_node"], dtype=np.int64)
-    src = np.concatenate([s, c])
-    dst = np.concatenate([c, s])
+    src, dst = _trade_edges_np(con)
     nodes = np.unique(src)
     src_idx = np.searchsorted(nodes, src)
     dst_idx = np.searchsorted(nodes, dst)
@@ -156,19 +212,7 @@ def _pagerank_oracle_py(con, sf_dir: str):
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
-    # Single-file fixture scans as ONE partition; repartition before the
-    # join so edge construction parallelizes (BASELINE.md perf note).
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").repartition(par)
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
-        .distinct()
-    )
-    edges = _sym_edges(pairs)
+    edges = _sym_edges(_trade_pairs(spark, sf_dir))
     # Degree via a window over the SAME src partitioning the per-round join
     # probes — one shuffle builds both (the old groupBy-then-join-back
     # shape shuffled edges twice and then destroyed the src partitioning
@@ -215,37 +259,11 @@ _CC_ITER = 4
 def _cc_oracle() -> str:
     # k rounds of min-label propagation; labels after round k are
     # deterministic whether or not the graph has fully converged.
-    parts = [
-        """
-    WITH pairs AS (
-      SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ), l0 AS (
-      SELECT DISTINCT src AS node, src AS label FROM edges
-    )"""
-    ]
-    for i in range(1, _CC_ITER + 1):
-        parts.append(
-            f""", l{i} AS (
-      SELECT n.node, LEAST(n.label, MIN(m.label)) AS label
-      FROM l{i - 1} n
-      JOIN edges e ON e.src = n.node
-      JOIN l{i - 1} m ON m.node = e.dst
-      GROUP BY n.node, n.label
-    )"""
-        )
-    parts.append(
-        f"""
+    return f"""{_edges_cte()}{_min_label_rounds(_CC_ITER)}
     SELECT label AS component, COUNT(*) AS n_nodes, MIN(node) AS min_node
     FROM l{_CC_ITER}
     GROUP BY label
     """
-    )
-    return "".join(parts)
 
 
 def _cc_oracle_py(con, sf_dir: str):
@@ -259,7 +277,7 @@ def _cc_oracle_py(con, sf_dir: str):
     (round-7 full-registry differential). The engine-side query is fine;
     only the oracle needed a scale-feasible twin. Equivalence to the SQL
     oracle at fixture scale is pinned by
-    tests/test_graph.py::test_cc_py_oracle_matches_sql_oracle.
+    tests/test_graph.py::test_py_oracle_matches_sql_oracle.
 
     Semantics mirrored exactly: l0 = node labels = node ids over DISTINCT
     edge sources; round i: label_i(n) = LEAST(label_{i-1}(n),
@@ -270,16 +288,7 @@ def _cc_oracle_py(con, sf_dir: str):
     """
     import numpy as np
 
-    res = con.execute(
-        """
-        SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """
-    ).fetchnumpy()
-    s = np.asarray(res["s_node"], dtype=np.int64)
-    c = np.asarray(res["c_node"], dtype=np.int64)
-    src = np.concatenate([s, c])
-    dst = np.concatenate([c, s])
+    src, dst = _trade_edges_np(con)
     nodes = np.unique(src)  # == unique(dst): edges are symmetric
     src_idx = np.searchsorted(nodes, src)
     dst_idx = np.searchsorted(nodes, dst)
@@ -318,16 +327,6 @@ def _cc_oracle_py(con, sf_dir: str):
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").repartition(par)
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
-        .distinct()
-    )
     # Partition edges by DST — the key every per-round join probes — and
     # labels by node: with equal partition counts the round's
     # edges⋈labels join reuses both sides' partitioning (no exchange),
@@ -335,7 +334,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join (node == src) aligns with that shuffle's output. One exchange
     # per round beats even the old forced-broadcast plan, and the shape
     # is exactly what src/dst-bucketed edge tables give at 100 TB.
-    edges = _sym_edges(pairs).repartition(par, "dst").transform(pin)
+    edges = _sym_edges(_trade_pairs(spark, sf_dir)).repartition(par, "dst").transform(pin)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -370,16 +369,42 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by src like the PageRank edges. Per-node output (triangle membership
 # count per supplier) keeps the result a stable, oracle-able table.
 # ---------------------------------------------------------------------------
-@query(
-    "graph_triangle_count",
-    oracle="""
+_TRI_PAIRS_CTE = """
     WITH li AS (
       SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_suppkey < 1000
     ), pairs AS (
       SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
       FROM li a JOIN li b
         ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-    ), tri AS (
+    )"""
+
+
+def _triangle_oracle_py(con, sf_dir: str):
+    """numpy twin: per-node triangle count = diag(A³)/2 over the co-supplier
+    adjacency matrix A (≤ 1000 nodes by the cohort cap). The SQL oracle's
+    three-way self-join is infeasible at sf0.1, where the graph is 91%
+    dense (453,588 edges over 1000 suppliers, ~124M triangles): it outgrows
+    the oracle connection's spill cap (plans/differential.py). Row i of
+    A² ∘ A summed is Σ_j (A²)_ij A_ij = diag(A³)_i; every entry is an
+    integer ≤ 1000², exact in the float64 BLAS product. Pinned ≡ the SQL
+    oracle at sf0.01 by tests/test_graph.py."""
+    import numpy as np
+
+    res = con.execute(f"{_TRI_PAIRS_CTE} SELECT u, v FROM pairs").fetchnumpy()
+    u = np.asarray(res["u"], dtype=np.int64)
+    v = np.asarray(res["v"], dtype=np.int64)
+    nodes = np.unique(np.concatenate([u, v]))
+    ui, vi = np.searchsorted(nodes, u), np.searchsorted(nodes, v)
+    adj = np.zeros((len(nodes), len(nodes)))
+    adj[ui, vi] = adj[vi, ui] = 1.0
+    tri = np.rint(((adj @ adj) * adj).sum(axis=1) / 2).astype(np.int64)
+    rows = [(int(n), int(t)) for n, t in zip(nodes, tri) if t > 0]
+    return ["node", "n_triangles"], rows
+
+
+@query(
+    "graph_triangle_count",
+    oracle=f"""{_TRI_PAIRS_CTE}, tri AS (
       SELECT e1.u AS a, e1.v AS b, e2.v AS c
       FROM pairs e1
       JOIN pairs e2 ON e2.u = e1.v
@@ -395,6 +420,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_triangles DESC, node
     """,
     tags=("graph", "join", "triangle"),
+    oracle_py=_triangle_oracle_py,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cohort cap (round 8): triangle ENUMERATION over a saturated
@@ -461,19 +487,12 @@ _BFS_HOPS = 3
 
 def _bfs_oracle() -> str:
     parts = [
-        """
-    WITH pairs AS (
-      SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ), f0 AS (
+        _edges_cte(),
+        """, f0 AS (
       SELECT DISTINCT 2 * s_suppkey AS node FROM supplier WHERE s_nationkey = 0
     ), v0 AS (
       SELECT node FROM f0
-    )"""
+    )""",
     ]
     for k in range(1, _BFS_HOPS + 1):
         parts.append(
@@ -502,17 +521,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nodes reachable at each min-hop distance (0..3) from the nation-0
     supplier seed set, over the supplier<->customer trade graph."""
     par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").repartition(par)
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
-        .distinct()
-    )
-    edges = _sym_edges(pairs).repartition(par, "src").transform(pin)
+    edges = _sym_edges(_trade_pairs(spark, sf_dir)).repartition(par, "src").transform(pin)
     sup = table(spark, sf_dir, "supplier")
     frontier = (
         sup.filter(F.col("s_nationkey") == 0)
@@ -563,15 +572,7 @@ def _deg_bucket_sql(col: str) -> str:
 
 @query(
     "graph_degree_histogram",
-    oracle=f"""
-    WITH pairs AS (
-      SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), edges AS (
-      SELECT s_node AS src FROM pairs
-      UNION ALL
-      SELECT c_node AS src FROM pairs
-    ), deg AS (
+    oracle=f"""{_edges_cte()}, deg AS (
       SELECT src, COUNT(*) AS d FROM edges GROUP BY src
     )
     SELECT CAST({_deg_bucket_sql('d')} AS BIGINT) AS bucket,
@@ -583,19 +584,9 @@ def _deg_bucket_sql(col: str) -> str:
     tags=("graph", "degree", "skew-diagnostic"),
 )
 def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").repartition(par)
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
-        .distinct()
-    )
     deg = (
-        pairs.select(F.explode(F.array(F.col("s_node"), F.col("c_node"))).alias("src"))
+        _trade_pairs(spark, sf_dir)
+        .select(F.explode(F.array(F.col("s_node"), F.col("c_node"))).alias("src"))
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
     )
@@ -636,17 +627,7 @@ _KCORE_ROUNDS = 4
 
 
 def _kcore_oracle() -> str:
-    parts = [
-        """
-    WITH pairs AS (
-      SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), e0 AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    )"""
-    ]
+    parts = [_edges_cte(), ", e0 AS (SELECT src, dst FROM edges)"]
     for i in range(1, _KCORE_ROUNDS + 1):
         parts.append(
             f""", a{i} AS (
@@ -674,16 +655,7 @@ def _kcore_oracle_py(con, sf_dir: str):
     fixture scale by tests/test_graph.py."""
     import numpy as np
 
-    res = con.execute(
-        """
-        SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """
-    ).fetchnumpy()
-    s = np.asarray(res["s_node"], dtype=np.int64)
-    c = np.asarray(res["c_node"], dtype=np.int64)
-    src = np.concatenate([s, c])
-    dst = np.concatenate([c, s])
+    src, dst = _trade_edges_np(con)
     for _ in range(_KCORE_ROUNDS):
         nodes, inv = np.unique(src, return_inverse=True)
         deg = np.bincount(inv)
@@ -707,17 +679,7 @@ def _kcore_oracle_py(con, sf_dir: str):
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").repartition(par)
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
-        .distinct()
-    )
-    edges = _sym_edges(pairs).repartition(par, "src").transform(pin)
+    edges = _sym_edges(_trade_pairs(spark, sf_dir)).repartition(par, "src").transform(pin)
     for _ in range(_KCORE_ROUNDS):
         alive = (
             edges.groupBy("src")
@@ -755,20 +717,11 @@ _SSSP_ROUNDS = 4
 
 def _sssp_oracle() -> str:
     parts = [
-        """
-    WITH pairs AS (
-      SELECT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node,
-             MIN(CAST(l_quantity AS BIGINT)) AS w
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY 1, 2
-    ), edges AS (
-      SELECT s_node AS src, c_node AS dst, w FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst, w FROM pairs
-    ), d0 AS (
+        _edges_cte(weighted=True),
+        """, d0 AS (
       SELECT DISTINCT 2 * s_suppkey AS node, CAST(0 AS BIGINT) AS dist
       FROM supplier WHERE s_nationkey = 0
-    )"""
+    )""",
     ]
     for i in range(1, _SSSP_ROUNDS + 1):
         parts.append(
@@ -792,26 +745,13 @@ def _sssp_oracle_py(con, sf_dir: str):
     pinned ≡ the SQL oracle at fixture scale by tests/test_graph.py."""
     import numpy as np
 
-    res = con.execute(
-        """
-        SELECT 2 * l_suppkey AS s, 2 * o_custkey + 1 AS c,
-               MIN(CAST(l_quantity AS BIGINT)) AS w
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-        """
-    ).fetchnumpy()
-    s = np.asarray(res["s"], dtype=np.int64)
-    c = np.asarray(res["c"], dtype=np.int64)
-    w = np.asarray(res["w"], dtype=np.int64)
+    src, dst, ww = _trade_edges_np(con, weighted=True)
     seeds = np.asarray(
         con.execute(
             "SELECT DISTINCT 2 * s_suppkey AS n FROM supplier WHERE s_nationkey = 0"
         ).fetchnumpy()["n"],
         dtype=np.int64,
     )
-    src = np.concatenate([s, c])
-    dst = np.concatenate([c, s])
-    ww = np.concatenate([w, w])
     nodes = np.unique(np.concatenate([src, seeds]))
     src_idx = np.searchsorted(nodes, src)
     dst_idx = np.searchsorted(nodes, dst)
@@ -838,18 +778,9 @@ def _sssp_oracle_py(con, sf_dir: str):
 )
 def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_quantity")
-        .repartition(par)
-    )
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     edges_one_way = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
+        _trade_join(spark, sf_dir, "l_quantity")
+        .groupBy(*_trade_nodes())
         .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
     )
     edges = _sym_edges(edges_one_way, "w").repartition(par, "src").transform(pin)
@@ -891,17 +822,10 @@ _LPA_ROUNDS = 3
 
 def _lpa_oracle() -> str:
     parts = [
-        """
-    WITH pairs AS (
-      SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ), edges AS (
-      SELECT s_node AS src, c_node AS dst FROM pairs
-      UNION ALL
-      SELECT c_node AS src, s_node AS dst FROM pairs
-    ), l0 AS (
+        _edges_cte(),
+        """, l0 AS (
       SELECT DISTINCT src AS node, src AS label FROM edges
-    )"""
+    )""",
     ]
     for i in range(1, _LPA_ROUNDS + 1):
         parts.append(
@@ -934,16 +858,7 @@ def _lpa_oracle_py(con, sf_dir: str):
     pure integer ops, bit-identical to the SQL semantics."""
     import numpy as np
 
-    res = con.execute(
-        """
-        SELECT DISTINCT 2 * l_suppkey AS s_node, 2 * o_custkey + 1 AS c_node
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """
-    ).fetchnumpy()
-    s = np.asarray(res["s_node"], dtype=np.int64)
-    c = np.asarray(res["c_node"], dtype=np.int64)
-    src = np.concatenate([s, c])
-    dst = np.concatenate([c, s])
+    src, dst = _trade_edges_np(con)
     nodes = np.unique(src)
     n = len(nodes)
     src_idx = np.searchsorted(nodes, src)
@@ -981,18 +896,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     par = spark.sparkContext.defaultParallelism
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").repartition(par)
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (2 * F.col("l_suppkey")).alias("s_node"),
-            (2 * F.col("o_custkey") + 1).alias("c_node"),
-        )
-        .distinct()
-    )
     edges = (
-        _sym_edges(pairs)
+        _sym_edges(_trade_pairs(spark, sf_dir))
         .repartition(par, "dst")  # the per-round join probes on dst (CC note)
         .transform(pin)
     )

@@ -185,43 +185,21 @@ def text_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5(s) % k = 0) before the self-join — same top-pairs ranking,
 # 1/k² the join. All outputs are integer counts: no float anywhere.
 # ---------------------------------------------------------------------------
-_CN_WINDOW = ("TIMESTAMP '1997-01-01'", "TIMESTAMP '1997-07-01'")
+_CN_WINDOW = ("1997-01-01", "1997-07-01")
 _CN_DEGCAP = 64
 
 
-@query(
-    "graph_common_neighbors",
-    oracle=f"""
-    WITH pairs AS (
-      SELECT DISTINCT l_suppkey AS s, o_custkey AS c
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE l_shipdate >= {_CN_WINDOW[0]} AND l_shipdate < {_CN_WINDOW[1]}
-    ), cdeg AS (
-      SELECT c, COUNT(*) AS d FROM pairs GROUP BY c
-    ), kept AS (
-      SELECT p.s, p.c FROM pairs p JOIN cdeg ON cdeg.c = p.c WHERE cdeg.d <= {_CN_DEGCAP}
-    ), sdeg AS (
-      SELECT s, COUNT(*) AS d FROM kept GROUP BY s
-    ), cn AS (
-      SELECT a.s AS s1, b.s AS s2, COUNT(*) AS common
-      FROM kept a JOIN kept b ON a.c = b.c AND a.s < b.s
-      GROUP BY a.s, b.s
-    )
-    SELECT cn.s1, cn.s2, CAST(cn.common AS BIGINT) AS common,
-           CAST(d1.d AS BIGINT) AS deg1, CAST(d2.d AS BIGINT) AS deg2
-    FROM cn JOIN sdeg d1 ON d1.s = cn.s1 JOIN sdeg d2 ON d2.s = cn.s2
-    ORDER BY common DESC, s1, s2
-    LIMIT 20
-    """,
-    tags=("graph", "link_prediction", "self_join"),
-)
-def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _copurchase_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(s1, s2, common, deg1, deg2) for every supplier pair sharing a
+    degree-capped customer in the trade window: the shared body of
+    graph_common_neighbors and graph_jaccard_ppm. Oracle twin:
+    _COPURCHASE_CTE's `scored`."""
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     pairs = (
         li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit(_CN_WINDOW[0]).cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit(_CN_WINDOW[1]).cast("timestamp"))
         )
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
@@ -249,6 +227,44 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cn.join(sdeg.withColumnRenamed("s", "s1").withColumnRenamed("d", "deg1"), "s1")
         .join(sdeg.withColumnRenamed("s", "s2").withColumnRenamed("d", "deg2"), "s2")
+    )
+
+
+_COPURCHASE_CTE = f"""
+    WITH pairs AS (
+      SELECT DISTINCT l_suppkey AS s, o_custkey AS c
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE l_shipdate >= TIMESTAMP '{_CN_WINDOW[0]}' AND l_shipdate < TIMESTAMP '{_CN_WINDOW[1]}'
+    ), cdeg AS (
+      SELECT c, COUNT(*) AS d FROM pairs GROUP BY c
+    ), kept AS (
+      SELECT p.s, p.c FROM pairs p JOIN cdeg ON cdeg.c = p.c WHERE cdeg.d <= {_CN_DEGCAP}
+    ), sdeg AS (
+      SELECT s, COUNT(*) AS d FROM kept GROUP BY s
+    ), cn AS (
+      SELECT a.s AS s1, b.s AS s2, COUNT(*) AS common
+      FROM kept a JOIN kept b ON a.c = b.c AND a.s < b.s
+      GROUP BY a.s, b.s
+    ), scored AS (
+      SELECT cn.s1, cn.s2, cn.common, d1.d AS deg1, d2.d AS deg2
+      FROM cn JOIN sdeg d1 ON d1.s = cn.s1 JOIN sdeg d2 ON d2.s = cn.s2
+    )"""
+
+
+@query(
+    "graph_common_neighbors",
+    oracle=f"""{_COPURCHASE_CTE}
+    SELECT s1, s2, CAST(common AS BIGINT) AS common,
+           CAST(deg1 AS BIGINT) AS deg1, CAST(deg2 AS BIGINT) AS deg2
+    FROM scored
+    ORDER BY common DESC, s1, s2
+    LIMIT 20
+    """,
+    tags=("graph", "link_prediction", "self_join"),
+)
+def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        _copurchase_scores(spark, sf_dir)
         .select("s1", "s2", "common", "deg1", "deg2")
         .orderBy(F.desc("common"), "s1", "s2")
         .limit(20)
@@ -492,63 +508,19 @@ def events_winsorized_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "graph_jaccard_ppm",
-    oracle=f"""
-    WITH pairs AS (
-      SELECT DISTINCT l_suppkey AS s, o_custkey AS c
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE l_shipdate >= {_CN_WINDOW[0]} AND l_shipdate < {_CN_WINDOW[1]}
-    ), cdeg AS (
-      SELECT c, COUNT(*) AS d FROM pairs GROUP BY c
-    ), kept AS (
-      SELECT p.s, p.c FROM pairs p JOIN cdeg ON cdeg.c = p.c WHERE cdeg.d <= {_CN_DEGCAP}
-    ), sdeg AS (
-      SELECT s, COUNT(*) AS d FROM kept GROUP BY s
-    ), cn AS (
-      SELECT a.s AS s1, b.s AS s2, COUNT(*) AS common
-      FROM kept a JOIN kept b ON a.c = b.c AND a.s < b.s
-      GROUP BY a.s, b.s
-    )
-    SELECT cn.s1, cn.s2,
-           CAST((1000000 * cn.common) // (d1.d + d2.d - cn.common) AS BIGINT)
-             AS jaccard_ppm,
-           CAST(cn.common AS BIGINT) AS common
-    FROM cn JOIN sdeg d1 ON d1.s = cn.s1 JOIN sdeg d2 ON d2.s = cn.s2
+    oracle=f"""{_COPURCHASE_CTE}
+    SELECT s1, s2,
+           CAST((1000000 * common) // (deg1 + deg2 - common) AS BIGINT) AS jaccard_ppm,
+           CAST(common AS BIGINT) AS common
+    FROM scored
     ORDER BY jaccard_ppm DESC, s1, s2
     LIMIT 20
     """,
     tags=("graph", "link_prediction", "fixed_point"),
 )
 def graph_jaccard_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
-        )
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
-        .distinct()
-    )
-    # Same degree-cap-as-window move as graph_common_neighbors (one
-    # evaluation of pairs, no groupBy+join-back).
-    kept = (
-        pairs.withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("c")))
-        .filter(F.col("d") <= _CN_DEGCAP)
-        .select("s", "c")
-        # Pinned until the harness's release_persisted() (SCALE.md §persist).
-        .transform(pin)
-    )
-    sdeg = kept.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    a, b = kept.alias("a"), kept.alias("b")
-    cn = (
-        a.join(b, (F.col("a.c") == F.col("b.c")) & (F.col("a.s") < F.col("b.s")))
-        .groupBy(F.col("a.s").alias("s1"), F.col("b.s").alias("s2"))
-        .agg(F.count(F.lit(1)).cast("long").alias("common"))
-    )
     return (
-        cn.join(sdeg.withColumnRenamed("s", "s1").withColumnRenamed("d", "deg1"), "s1")
-        .join(sdeg.withColumnRenamed("s", "s2").withColumnRenamed("d", "deg2"), "s2")
+        _copurchase_scores(spark, sf_dir)
         .select(
             "s1",
             "s2",

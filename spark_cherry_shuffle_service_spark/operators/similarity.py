@@ -272,17 +272,37 @@ _IVF_TOPK = 3
 
 
 # ---------------------------------------------------------------------------
-# IVF-style ANN (scale path #2): coarse-quantize every vector to its nearest
-# "centroid" (deterministically the first K vectors, so both engines agree
-# without training), then search only within the query's cell. At 100 TB the
-# assignment is one broadcast-join pass and the search is a hash join on
-# cell id over a table pre-partitioned (or bucketed) by cell — candidate
-# count drops from N to N/K per query, and real centroids (k-means) slot in
-# without changing the plan shape.
+# IVF cell assignment, shared by the four IVF queries below: every vector's
+# cell is its nearest centroid by cosine, ties to the lower cent_id.
+# Spark: _ivf_cents / _ivf_assigned; oracle twin: _IVF_ASSIGNED_CTE. Callers
+# pin `emb` themselves.
 # ---------------------------------------------------------------------------
-@query(
-    "similarity_ivf",
-    oracle=f"""
+def _ivf_cents(emb: DataFrame) -> DataFrame:
+    """(cent_id, ce, cn): the first _IVF_K vectors of `emb`
+    (vec_id, embedding, nrm) serve as centroids."""
+    return emb.filter(F.col("vec_id") < _IVF_K).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("embedding").alias("ce"),
+        F.col("nrm").alias("cn"),
+    )
+
+
+def _ivf_assigned(emb: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, cell, *keep): each row of `emb` with its nearest centroid's
+    id as `cell`. The centroid set is SF-invariant, so it broadcasts."""
+    cents = _ivf_cents(emb)
+    cos_to_cent = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
+    w_assign = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
+    return (
+        emb.join(F.broadcast(cents))
+        .withColumn("cos_c", cos_to_cent)
+        .withColumn("rn", F.row_number().over(w_assign))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", F.col("cent_id").alias("cell"), *keep)
+    )
+
+
+_IVF_ASSIGNED_CTE = f"""
     WITH n AS (
       SELECT vec_id, embedding, {_sql_norm('embedding')} AS nrm FROM embeddings
     ), c AS (
@@ -296,7 +316,21 @@ _IVF_TOPK = 3
                  c.cent_id) AS rn
         FROM n CROSS JOIN c
       ) WHERE rn = 1
-    ), q AS (
+    )"""
+
+
+# ---------------------------------------------------------------------------
+# IVF-style ANN (scale path #2): coarse-quantize every vector to its nearest
+# "centroid" (deterministically the first K vectors, so both engines agree
+# without training), then search only within the query's cell. At 100 TB the
+# assignment is one broadcast-join pass and the search is a hash join on
+# cell id over a table pre-partitioned (or bucketed) by cell — candidate
+# count drops from N to N/K per query, and real centroids (k-means) slot in
+# without changing the plan shape.
+# ---------------------------------------------------------------------------
+@query(
+    "similarity_ivf",
+    oracle=f"""{_IVF_ASSIGNED_CTE}, q AS (
       SELECT vec_id AS query_id, cell, embedding AS qe, nrm AS qn
       FROM assigned WHERE vec_id >= {_IVF_NQ_LO} AND vec_id < {_IVF_NQ_HI}
     ), scored AS (
@@ -322,20 +356,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
     )
-    cents = emb.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    cos_to_cent = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    assigned = (
-        emb.join(F.broadcast(cents))
-        .withColumn("cos_c", cos_to_cent)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"), "embedding", "nrm")
-    )
+    assigned = _ivf_assigned(emb, "embedding", "nrm")
     q = assigned.filter(
         (F.col("vec_id") >= _IVF_NQ_LO) & (F.col("vec_id") < _IVF_NQ_HI)
     ).select(
@@ -1112,21 +1133,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "similarity_ivfpq",
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {_sql_norm('embedding')} AS nrm FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cent_id, embedding AS ce, nrm AS cn FROM n WHERE vec_id < {_IVF_K}
-    ), assigned AS (
-      SELECT vec_id, cent_id AS cell
-      FROM (
-        SELECT n.vec_id, c.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY
-                 {_SQL_DOT_AB.format(a='n.embedding', b='c.ce')} / (n.nrm * c.cn) DESC,
-                 c.cent_id) AS rn
-        FROM n CROSS JOIN c
-      ) WHERE rn = 1
-    ), dists AS (
+    oracle=f"""{_IVF_ASSIGNED_CTE}, dists AS (
       SELECT vec_id,
              {', '.join(f'{_pq_dist_sql(m, k)} AS d{m}_{k}' for m in range(_PQ_M) for k in range(_PQ_K))}
       FROM embeddings
@@ -1135,10 +1142,10 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
              {', '.join(f"CAST({_pq_argmin([f'd{m}_0', f'd{m}_1', f'd{m}_2', f'd{m}_3'])} AS INT) AS code{m}" for m in range(_PQ_M))}
       FROM assigned a JOIN dists USING (vec_id)
     ), q AS (
-      SELECT e.vec_id AS query_id, a.cell AS qcell,
+      SELECT vec_id AS query_id, cell AS qcell,
              {', '.join(f'{_adc_qdist_sql(m, k)} AS q{m}_{k}' for m in range(_PQ_M) for k in range(_PQ_K))}
-      FROM embeddings e JOIN assigned a USING (vec_id)
-      WHERE e.vec_id >= {_IVF_NQ_LO} AND e.vec_id < {_IVF_NQ_HI}
+      FROM assigned
+      WHERE vec_id >= {_IVF_NQ_LO} AND vec_id < {_IVF_NQ_HI}
     ), scored AS (
       SELECT q.query_id, q.qcell AS cell, c2.vec_id AS neighbor_id,
              {' + '.join(f'({_adc_lookup(m)})' for m in range(_PQ_M))} AS adc
@@ -1162,20 +1169,7 @@ def similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
         .transform(pin)  # feeds cell assignment, PQ codes, and the query table
     )
-    cents = emb.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    cos_to_cent = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    assigned = (
-        emb.join(F.broadcast(cents))
-        .withColumn("cos_c", cos_to_cent)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"), "embedding")
-    )
+    assigned = _ivf_assigned(emb, "embedding")
     # distances materialize in their own projection so the argmin CASE
     # references columns, not re-evaluated HOF folds (CLAUDE.md gotcha)
     corpus = assigned.selectExpr(
@@ -1360,21 +1354,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "similarity_ann_recall",
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {_sql_norm('embedding')} AS nrm FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cent_id, embedding AS ce, nrm AS cn FROM n WHERE vec_id < {_IVF_K}
-    ), assigned AS (
-      SELECT vec_id, cent_id AS cell, embedding, nrm
-      FROM (
-        SELECT n.vec_id, c.cent_id, n.embedding, n.nrm,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY
-                 {_SQL_DOT_AB.format(a='n.embedding', b='c.ce')} / (n.nrm * c.cn) DESC,
-                 c.cent_id) AS rn
-        FROM n CROSS JOIN c
-      ) WHERE rn = 1
-    ), q AS (
+    oracle=f"""{_IVF_ASSIGNED_CTE}, q AS (
       SELECT vec_id AS query_id, cell, embedding AS qe, nrm AS qn
       FROM assigned WHERE vec_id >= {_IVF_NQ_LO} AND vec_id < {_IVF_NQ_HI}
     ), ivf AS (
@@ -1412,18 +1392,7 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
         .transform(pin)  # feeds centroid pick, assignment, truth corpus
     )
-    cents = emb.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
-    )
-    cos_to_cent = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    assigned = (
-        emb.join(F.broadcast(cents))
-        .withColumn("cos_c", cos_to_cent)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"), "embedding", "nrm")
-    )
+    assigned = _ivf_assigned(emb, "embedding", "nrm")
     q = assigned.filter(
         (F.col("vec_id") >= _IVF_NQ_LO) & (F.col("vec_id") < _IVF_NQ_HI)
     ).select(
@@ -1482,21 +1451,7 @@ _NPROBES = (1, 2, 4)
 
 @query(
     "similarity_ivf_nprobe_sweep",
-    oracle=f"""
-    WITH n AS (
-      SELECT vec_id, embedding, {_sql_norm('embedding')} AS nrm FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cent_id, embedding AS ce, nrm AS cn FROM n WHERE vec_id < {_IVF_K}
-    ), assigned AS (
-      SELECT vec_id, cent_id AS cell, embedding, nrm
-      FROM (
-        SELECT n.vec_id, c.cent_id, n.embedding, n.nrm,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY
-                 {_SQL_DOT_AB.format(a='n.embedding', b='c.ce')} / (n.nrm * c.cn) DESC,
-                 c.cent_id) AS rn
-        FROM n CROSS JOIN c
-      ) WHERE rn = 1
-    ), q AS (
+    oracle=f"""{_IVF_ASSIGNED_CTE}, q AS (
       SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
       FROM n WHERE vec_id >= {_IVF_NQ_LO} AND vec_id < {_IVF_NQ_HI}
     ), cell_rank AS (
@@ -1556,18 +1511,8 @@ def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
         .transform(pin)  # centroid pick + assignment + truth corpus
     )
-    cents = emb.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
-    )
-    cos_to_cent = dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    assigned = (
-        emb.join(F.broadcast(cents))
-        .withColumn("cos_c", cos_to_cent)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"), "embedding", "nrm")
-    )
+    assigned = _ivf_assigned(emb, "embedding", "nrm")
+    cents = _ivf_cents(emb)
     q = emb.filter((F.col("vec_id") >= _IVF_NQ_LO) & (F.col("vec_id") < _IVF_NQ_HI)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),

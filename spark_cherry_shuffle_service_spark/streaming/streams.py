@@ -537,11 +537,10 @@ def cusum_batch_frame(spark: SparkSession, sf_dir: str, target_micro: int = CUSU
 # "today's crawl" streams in and is probed against the STATIC corpus band
 # index; per-batch cost scales with the batch, never corpus x corpus.
 #
-# Streaming-shape notes: the batch op builds signatures by
-# explode+groupBy(min) (faster on a big static table), but a streaming
-# aggregation would make the downstream joins unsupported — so the stream
-# computes the IDENTICAL signature with the pure column expression
-# (functions/text.py::minhash_signature; same md5 kernel, same bands).
+# Streaming-shape notes: both sides use the batch op's aggregation-free
+# signature (functions/text.py::minhash_signature) and band keys
+# (dedup.py::_band_keys) — a streaming aggregation would make the
+# downstream joins unsupported.
 # Pipeline: projection (sig+bands) -> stream-static join on (band, bkey)
 # (stateless) -> dropDuplicates on the pair (stateful; keyed by pair id,
 # bounded by this batch's true-pair count — add a watermark on ingest
@@ -551,12 +550,7 @@ def cusum_batch_frame(spark: SparkSession, sf_dir: str, target_micro: int = CUSU
 # ---------------------------------------------------------------------------
 def dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_cherry_shuffle_service_spark.functions.text import minhash_signature, shingles3
-    from spark_cherry_shuffle_service_spark.operators.dedup import (
-        _MH_BANDS,
-        _MH_N,
-        _MH_ROWS,
-        _MH_TAU,
-    )
+    from spark_cherry_shuffle_service_spark.operators.dedup import _MH_N, _MH_TAU, _band_keys
     from spark_cherry_shuffle_service_spark.sources.catalog import table
 
     # STATIC corpus side (batch DataFrames — at 100 TB this is the
@@ -567,45 +561,18 @@ def dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", shingles3(F.col("text")).alias("sh")
     )
     csig = corpus.select("doc_id", "sh", minhash_signature(F.col("sh"), _MH_N).alias("sig"))
-    cbands = csig.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_BANDS - 1)),
-                lambda band: F.struct(
-                    band.alias("band"),
-                    F.md5(
-                        F.array_join(F.slice(F.col("sig"), band * _MH_ROWS + 1, _MH_ROWS), "")
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(
-        F.col("doc_id").alias("dup_of"), F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    ).filter(F.col("dup_of") % 7 != 0)
+    cbands = (
+        _band_keys(csig, "doc_id")
+        .withColumnRenamed("doc_id", "dup_of")
+        .filter(F.col("dup_of") % 7 != 0)
+    )
     cshingles = corpus.select(F.col("doc_id").alias("dup_of"), F.col("sh").alias("sh_a"))
 
     # STREAMING incoming side: same signature from the pure expression.
     docs = read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 7 == 0)
     s = docs.select("doc_id", shingles3(F.col("text")).alias("sh"))
     sig = s.select("doc_id", "sh", minhash_signature(F.col("sh"), _MH_N).alias("sig"))
-    sbands = sig.select(
-        "doc_id",
-        "sh",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_BANDS - 1)),
-                lambda band: F.struct(
-                    band.alias("band"),
-                    F.md5(
-                        F.array_join(F.slice(F.col("sig"), band * _MH_ROWS + 1, _MH_ROWS), "")
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "sh", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    )
+    sbands = _band_keys(sig, "doc_id", "sh")
     cands = (
         sbands.join(cbands, ["band", "bkey"])
         .select("doc_id", "dup_of", "sh")

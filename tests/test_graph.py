@@ -1,5 +1,5 @@
-"""Graph-operator oracle plumbing: the Python connected-components oracle
-and the compare harness's transparent py-oracle fallback.
+"""Graph-operator oracle plumbing: the numpy oracle twins and the compare
+harness's transparent py-oracle fallback.
 
 Background (round 7): the full-registry generated-scale (~sf1)
 differential killed the connected-components SQL oracle — DuckDB's
@@ -16,6 +16,10 @@ resource error. These tests anchor that fallback:
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from spark_cherry_shuffle_service_spark.plans.differential import (
     compare_queries,
     duck_rows,
@@ -26,53 +30,41 @@ from spark_cherry_shuffle_service_spark.plans.registry import (
     QuerySpec,
     all_specs,
 )
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, duck_connection
+
+SF_01 = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")
 
 
-def test_cc_py_oracle_matches_sql_oracle(duck_correct):
-    spec = all_specs()["graph_connected_components"]
+@pytest.mark.parametrize(
+    "name, sf_dir",
+    [
+        ("graph_connected_components", SF_CORRECT),
+        ("graph_pagerank", SF_CORRECT),
+        ("graph_kcore", SF_CORRECT),
+        ("graph_sssp_bounded", SF_CORRECT),
+        ("graph_label_propagation", SF_CORRECT),
+        # the SQL oracle's three-way self-join is infeasible at sf0.1
+        ("graph_triangle_count", SF_CORRECT),
+        # At sf0.1 the edge set is ~10x sf0.01 and these SQL oracles still
+        # fit DuckDB, one scale below where they become infeasible.
+        ("graph_connected_components", SF_01),
+        ("graph_pagerank", SF_01),
+        ("graph_kcore", SF_01),
+        ("graph_sssp_bounded", SF_01),
+        ("graph_label_propagation", SF_01),
+    ],
+    ids=lambda v: v.rsplit("/", 1)[-1],
+)
+def test_py_oracle_matches_sql_oracle(name, sf_dir):
+    """The numpy fallback oracle equals the SQL oracle, row for row."""
+    spec = all_specs()[name]
     assert spec.oracle_py is not None
-    d_cols, d_rows = duck_rows(duck_correct, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, duck_correct, SF_CORRECT)
+    con = duck_connection(sf_dir)
+    d_cols, d_rows = duck_rows(con, spec.oracle)
+    p_cols, p_rows = py_oracle_rows(spec.oracle_py, con, sf_dir)
     assert p_cols == d_cols
     assert p_rows == d_rows
     assert len(p_rows) > 0
-
-
-def test_pagerank_py_oracle_matches_sql_oracle(duck_correct):
-    spec = all_specs()["graph_pagerank"]
-    assert spec.oracle_py is not None
-    d_cols, d_rows = duck_rows(duck_correct, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, duck_correct, SF_CORRECT)
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-    assert len(p_rows) > 0
-
-
-def test_pagerank_py_oracle_matches_sql_oracle_sf01():
-    from tests.conftest import duck_connection
-
-    con = duck_connection("/root/testdata/sf0.1")
-    spec = all_specs()["graph_pagerank"]
-    d_cols, d_rows = duck_rows(con, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, con, "/root/testdata/sf0.1")
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-
-
-def test_cc_py_oracle_matches_sql_oracle_sf01():
-    """Second scale point for the fallback oracle: at sf0.1 the edge set
-    is ~10x sf0.01 and the SQL oracle still fits DuckDB's temp budget, so
-    both oracles can be compared directly one scale below where the SQL
-    one becomes infeasible."""
-    from tests.conftest import duck_connection
-
-    con = duck_connection("/root/testdata/sf0.1")
-    spec = all_specs()["graph_connected_components"]
-    d_cols, d_rows = duck_rows(con, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, con, "/root/testdata/sf0.1")
-    assert p_cols == d_cols
-    assert p_rows == d_rows
 
 
 def test_py_oracle_fallback_is_transparent(spark, duck_correct):
@@ -138,27 +130,6 @@ def test_sql_oracle_value_mismatch_never_falls_back(spark, duck_correct):
     assert results[name].startswith("MISMATCH"), results[name]
 
 
-def test_kcore_py_oracle_matches_sql_oracle(duck_correct):
-    spec = all_specs()["graph_kcore"]
-    assert spec.oracle_py is not None
-    d_cols, d_rows = duck_rows(duck_correct, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, duck_correct, SF_CORRECT)
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-    assert len(p_rows) > 0
-
-
-def test_kcore_py_oracle_matches_sql_oracle_sf01():
-    from tests.conftest import duck_connection
-
-    con = duck_connection("/root/testdata/sf0.1")
-    spec = all_specs()["graph_kcore"]
-    d_cols, d_rows = duck_rows(con, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, con, "/root/testdata/sf0.1")
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-
-
 def test_kcore_actually_peels(duck_correct):
     """The fixture graph must exercise the peel: some nodes die (the
     output is a strict subset of the node set), and edge deletion is
@@ -192,27 +163,6 @@ def test_kcore_actually_peels(duck_correct):
     assert sorted(rows) == sorted(src_rows)
 
 
-def test_sssp_py_oracle_matches_sql_oracle(duck_correct):
-    spec = all_specs()["graph_sssp_bounded"]
-    assert spec.oracle_py is not None
-    d_cols, d_rows = duck_rows(duck_correct, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, duck_correct, SF_CORRECT)
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-    assert len(p_rows) > 0
-
-
-def test_sssp_py_oracle_matches_sql_oracle_sf01():
-    from tests.conftest import duck_connection
-
-    con = duck_connection("/root/testdata/sf0.1")
-    spec = all_specs()["graph_sssp_bounded"]
-    d_cols, d_rows = duck_rows(con, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, con, "/root/testdata/sf0.1")
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-
-
 def test_sssp_distances_are_sound(duck_correct):
     """Seeds sit at distance 0; every other reached node is strictly
     positive; and the reached SET equals the BFS reachable set at the same
@@ -231,27 +181,6 @@ def test_sssp_distances_are_sound(duck_correct):
     assert seeds <= set(dists)
     assert all(dists[n] == 0 for n in seeds)
     assert all(d > 0 for n, d in dists.items() if n not in seeds)
-
-
-def test_lpa_py_oracle_matches_sql_oracle(duck_correct):
-    spec = all_specs()["graph_label_propagation"]
-    assert spec.oracle_py is not None
-    d_cols, d_rows = duck_rows(duck_correct, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, duck_correct, SF_CORRECT)
-    assert p_cols == d_cols
-    assert p_rows == d_rows
-    assert len(p_rows) > 0
-
-
-def test_lpa_py_oracle_matches_sql_oracle_sf01():
-    from tests.conftest import duck_connection
-
-    con = duck_connection("/root/testdata/sf0.1")
-    spec = all_specs()["graph_label_propagation"]
-    d_cols, d_rows = duck_rows(con, spec.oracle)
-    p_cols, p_rows = py_oracle_rows(spec.oracle_py, con, "/root/testdata/sf0.1")
-    assert p_cols == d_cols
-    assert p_rows == d_rows
 
 
 def test_lpa_actually_coarsens(duck_correct):

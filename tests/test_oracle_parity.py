@@ -5,8 +5,8 @@ from __future__ import annotations
 
 import pytest
 
+from spark_cherry_shuffle_service_spark.plans.differential import assert_matches_oracle
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
-from tests.compare import assert_matches_oracle
 from tests.conftest import SF_CORRECT
 
 SPECS = all_specs()

@@ -90,9 +90,9 @@ def test_limited_queries_are_parallelism_invariant(spark):
     run each limited query at three shuffle-partition settings and demand
     identical result sets (shuffle.partitions is runtime-settable, so the
     same session re-plans each time)."""
+    from spark_cherry_shuffle_service_spark.plans.differential import spark_rows
     from spark_cherry_shuffle_service_spark.plans.explain import formatted_plan
     from spark_cherry_shuffle_service_spark.plans.registry import all_specs
-    from tests.compare import spark_rows
 
     specs = all_specs()
     limited = []

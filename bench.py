@@ -24,6 +24,7 @@ from spark_cherry_shuffle_service_spark.plans.measure import (
     warm_up,
 )
 from spark_cherry_shuffle_service_spark.session import get_spark
+from spark_cherry_shuffle_service_spark.sources.catalog import DEFAULT_SF_DIR
 
 #: Machine-readable per-query baselines (median-of-3, fresh process,
 #: sf0.1) — the single canonical table BASELINE.md points at. bench.py
@@ -108,10 +109,9 @@ def is_violation(
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", RUNS_PER_QUERY))
     spark = get_spark(app_name="cherry-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -145,7 +145,7 @@ def main() -> None:
         # construction too; runs[0] is cold and later runs re-hit the
         # query's own pinned frames, which measure_query releases at the
         # end — no query inherits another query's cached blocks.
-        ms = [measure_query(spark, name, sf_dir, runs_per_query)]
+        ms = [measure_query(spark, name, sf_dir, RUNS_PER_QUERY)]
         t = statistics.median(ms[0].runs)
         if is_violation(t, baselines.get(name), drift):
             # Stall suspect: re-time in the same process and keep the best
@@ -197,7 +197,7 @@ def main() -> None:
         "metric": "headline_query_set_wall_clock",
         "unit": "sec",
         "protocol": {
-            "runs_per_query": runs_per_query,
+            "runs_per_query": RUNS_PER_QUERY,
             "stat": "median",
             "stall_factor": STALL_FACTOR,
             "retime_runs": RETIME_RUNS,

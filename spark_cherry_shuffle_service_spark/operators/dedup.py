@@ -177,7 +177,9 @@ def _banded_sql() -> str:
 
 def _minhash_pairs_cte() -> str:
     """Shared WITH-prefix ending in a `dups(doc_a, doc_b, jaccard)` CTE —
-    the verified near-dup pair table both minhash queries build on."""
+    the verified near-dup pair table both minhash queries build on.
+    MATERIALIZED: DuckDB inlines a plain CTE at each reference, and the
+    cluster oracle reads `dups` twice, so it would rerun the MinHash chain."""
     return f"""
     WITH toks AS (
       SELECT doc_id, {_SQL_SHINGLES3} AS sh
@@ -192,7 +194,7 @@ def _minhash_pairs_cte() -> str:
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
         ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-    ), dups AS (
+    ), dups AS MATERIALIZED (
       SELECT doc_a, doc_b,
              ROUND(len(list_intersect(ta.sh, tb.sh))::DOUBLE
                    / (len(ta.sh) + len(tb.sh) - len(list_intersect(ta.sh, tb.sh))), 4) AS jaccard
@@ -287,9 +289,11 @@ def _min_label_rounds(rounds: int) -> str:
     a node takes LEAST(own label, MIN of its neighbours' labels). The SQL
     kernel of graph.py's connected components and of
     dedup_cluster_canonical; labels after round k are deterministic whether
-    or not the graph has converged."""
+    or not the graph has converged. Each round reads the previous one
+    twice, so every round is MATERIALIZED: inlined, DuckDB would evaluate
+    round 1 2^(k-1) times."""
     steps = "".join(
-        f""", l{i} AS (
+        f""", l{i} AS MATERIALIZED (
       SELECT n.node, LEAST(n.label, MIN(m.label)) AS label
       FROM l{i - 1} n
       JOIN edges e ON e.src = n.node
@@ -307,7 +311,7 @@ def _cluster_oracle() -> str:
     # Min-label propagation over the near-dup pair graph, unrolled to a
     # fixed round count — 3 rounds covers any chain the fixture's planted
     # dups form.
-    return f"""{_minhash_pairs_cte()}, edges AS (
+    return f"""{_minhash_pairs_cte()}, edges AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM dups
       UNION ALL
       SELECT doc_b AS src, doc_a AS dst FROM dups

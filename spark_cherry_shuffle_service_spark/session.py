@@ -31,17 +31,34 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 16g: the local[] JVM
+    shares the host with the Python workers and the DuckDB oracle."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // (1 << 20)
+    return f"{min(half_mb, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "cherry-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
+    """Build (or reuse) a SparkSession with the engine's standard config.
+
+    This is the only code that configures a session. The package's readers
+    and generators expect a session built here: they rely on its UTC
+    session time zone and on `spark.sql.legacy.parquet.nanosAsLong`, and set
+    no conf themselves. Cluster confs (external shuffle service, dynamic
+    allocation, off-heap memory) go through `extra_conf` or
+    spark-defaults.conf, as the reference deploys them
+    (conf/spark-defaults.conf:44-45). `getOrCreate` applies the runtime SQL
+    confs to a live session too; JVM-launch confs (heap, master) take effect
+    only in a new one.
+    """
     p = shuffle_partitions or _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{_default_parallelism()}]")
+        .master(f"local[{_default_parallelism()}]")
         # Shuffle sizing: reference exposes -p (spark-driver.sh:147-148).
         .config("spark.sql.shuffle.partitions", str(p))
         .config("spark.default.parallelism", str(p))
@@ -53,7 +70,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Join planning parity: TPCDSQueryBenchmark.scala:57-58.
         .config("spark.sql.autoBroadcastJoinThreshold", str(20 * 1024 * 1024))
-        # Deterministic cross-engine comparison (DuckDB oracle).
+        # Deterministic cross-engine comparison (DuckDB oracle): the events
+        # `ts` decode (catalog.normalize_ts) and the generators' NTZ casts
+        # read naive wall-clock values as UTC instants.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Arrow for the few pandas-UDF operators (multimodal, streaming state).
@@ -61,7 +80,7 @@ def get_spark(
         # events.ts has shipped as TIMESTAMP(NANOS) (round-1 fixtures) and
         # timestamp[us] (round-2 regeneration); this conf makes the NANOS
         # form readable and is a no-op for µs files. The catalog branches
-        # on the actual dtype (sources/catalog.py::table).
+        # on the actual dtype (sources/catalog.py::normalize_ts).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Straggler mitigation: the Cherry paper's motivation is reduce-task
         # stalls on slow shuffle reads; on a real cluster speculative
@@ -79,58 +98,16 @@ def get_spark(
         # accumulated cached blocks. Size it like a real executor (only
         # effective at JVM launch; a getOrCreate() against a live session
         # keeps the existing heap).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # Observability parity: the reference exports per-stage/task metrics
         # through Spark's Prometheus endpoint (core/.../PrometheusResource
         # .scala:110-190, upstream conf spark.ui.prometheus.enabled). The
         # conf is set unconditionally; metrics are actually served only when
-        # the UI is on (enable_ui=True / SPARK_GRAFT_UI=1 on a cluster —
-        # local test runs keep the UI off to avoid the port bind).
+        # the UI is on (extra_conf={"spark.ui.enabled": "true"} on a cluster;
+        # local runs keep the UI off to avoid the port bind).
         .config("spark.ui.prometheus.enabled", "true")
     )
-    # Elasticity/externalized-shuffle pass-through (SURVEY §2.12): Cherry's
-    # failure story is shuffle files surviving executor loss + scale-down.
-    # On K8s/YARN the same effect is the external shuffle service + dynamic
-    # allocation; local[] has a single executor, so these stay opt-in knobs
-    # driven by the environment rather than hard-coded (they would no-op or
-    # fail to bind locally).
-    #   SPARK_GRAFT_EXTERNAL_SHUFFLE=1 -> spark.shuffle.service.enabled
-    #   SPARK_GRAFT_DYNAMIC_ALLOCATION=min:max -> dynamicAllocation bounds
-    # The behavior itself is demonstrated LIVE (not just config) in
-    # tests/test_cluster_recovery.py::
-    # test_dynamic_allocation_scales_executors_up_and_down: a
-    # local-cluster session with these exact confs goes 0 -> max -> 0
-    # real executor JVMs around a backlogged stage (the reference's
-    # metricsMonitor.py:150-162 scale-up/down loop, natively).
-    if os.environ.get("SPARK_GRAFT_EXTERNAL_SHUFFLE"):
-        builder = builder.config("spark.shuffle.service.enabled", "true")
-    # Off-heap Tungsten parity (VERDICT r7 item 6): the reference deploys
-    # with `spark.memory.offHeap.enabled true` / `spark.memory.offHeap.size
-    # 2g` (/root/reference/conf/spark-defaults.conf:44-45) so shuffle/sort
-    # buffers live outside the GC heap. Same shape here, env-driven:
-    # SPARK_GRAFT_OFFHEAP=2g. Opt-in rather than hard-coded because local[]
-    # test JVMs are sized by SPARK_GRAFT_DRIVER_MEM and an unconditional
-    # 2 GB off-heap reservation would double-count memory on small hosts;
-    # on a real cluster export the var in the launch env (the reference
-    # sets it cluster-wide the same way, via conf file). Exercised live in
-    # tests/test_cluster_recovery.py::test_offheap_conf_runs_green.
-    offheap = os.environ.get("SPARK_GRAFT_OFFHEAP")
-    if offheap:
-        builder = builder.config("spark.memory.offHeap.enabled", "true").config(
-            "spark.memory.offHeap.size", offheap
-        )
-    dyn = os.environ.get("SPARK_GRAFT_DYNAMIC_ALLOCATION")
-    if dyn:
-        lo, _, hi = dyn.partition(":")
-        builder = (
-            builder.config("spark.dynamicAllocation.enabled", "true")
-            .config("spark.dynamicAllocation.minExecutors", lo or "0")
-            .config("spark.dynamicAllocation.maxExecutors", hi or lo or "2")
-            # shuffle tracking lets dynamic allocation work without an
-            # external shuffle service (K8s path)
-            .config("spark.dynamicAllocation.shuffleTracking.enabled", "true")
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -24,7 +24,7 @@ from typing import Callable
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 #: Every driver fixture table (TESTDATA.md).
 TABLES = (
@@ -146,29 +146,24 @@ def parquet_rows(path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
 
 
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampType
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """Decode any physical events `ts` encoding to session-TZ TimestampType,
+    for batch and streaming reads alike: nanos-as-long →
+    timestamp_micros(ts div 1000), lossless as the fixture has no sub-µs;
+    TIMESTAMP_NTZ → cast, which reads the wall clock in the session time
+    zone (UTC under get_spark: naive-as-UTC, like DuckDB's epoch_us and the
+    nanos path); TIMESTAMP as is."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
-        # Legacy conf makes a TIMESTAMP(NANOS) file readable (as long);
-        # harmless no-op for µs files.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-        ts_type = raw.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            # nanos-as-long → µs timestamp; lossless, fixture has no sub-µs.
-            return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if not isinstance(ts_type, TimestampType):
-            # TIMESTAMP_NTZ (µs, no tz) → session-TZ timestamp. The cast
-            # interprets NTZ wall-clock in the session TZ, so pin it to UTC
-            # (naive-as-UTC, matching DuckDB's epoch_us and the nanos path's
-            # instant semantics) — otherwise instant math (unix_micros,
-            # watermarks) would depend on the host TZ of a vanilla session.
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return normalize_ts(df) if name == "events" else df
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

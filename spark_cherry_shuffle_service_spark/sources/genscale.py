@@ -33,9 +33,10 @@ Design rules:
   customer/supplier/part are GENERATED at sqrt(scale) entity counts
   (round 8 — see entity_counts) with fixture-faithful value domains.
 - **Physical types match the r2 driver fixtures**: timestamp[us] NTZ
-  (written from TimestampNTZType; session TZ pinned UTC during
-  generation), int64 keys, int32 l_linenumber, double money — so
-  `sources/catalog.py::table`'s dtype branches exercise the same paths.
+  (written from TimestampNTZType under get_spark's UTC session time
+  zone), int64 keys, int32 l_linenumber, double money — so
+  `sources/catalog.py::normalize_ts`'s dtype branches exercise the same
+  paths.
 """
 
 from __future__ import annotations
@@ -394,9 +395,6 @@ def generate_scaled_fixtures(
         if {k: have.get(k) for k in want} == want:
             return have
     os.makedirs(out_dir, exist_ok=True)
-    # NTZ casts interpret instants in the session TZ — pin UTC so the
-    # generated wall-clock values are host-independent.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     n_orders, n_events = want["orders"], want["events"]
     frames = {
         "orders": gen_orders(spark, n_orders, entities["customers"], partitions),

@@ -1516,7 +1516,6 @@ def generate_star(spark: SparkSession, sf_dir: str, force: bool = False) -> dict
                 "fixture dir"
             )
     os.makedirs(out_dir, exist_ok=True)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     lineitem = table(spark, sf_dir, "lineitem")
     cust = table(spark, sf_dir, "customer")
     part = table(spark, sf_dir, "part")

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from spark_cherry_shuffle_service_spark.sources.catalog import read_parquet
+from spark_cherry_shuffle_service_spark.sources.catalog import normalize_ts, read_parquet
 
 #: Logical (post-normalization) events schema: what every downstream
 #: operator sees after `normalize_ts`, regardless of the file's physical
@@ -58,27 +58,7 @@ def events_file_schema(spark: SparkSession, path: str) -> StructType:
     read of the footer (streaming reads require an explicit schema, and it
     must match the file — schema-on-read, never hardcoded: the fixture's
     `ts` physical type has drifted across driver regenerations)."""
-    # Legacy conf makes a TIMESTAMP(NANOS) file readable (as long); no-op
-    # for µs files.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return read_parquet(spark, path).schema
-
-
-def normalize_ts(df: DataFrame) -> DataFrame:
-    """Normalize any physical `ts` encoding to session-TZ TimestampType:
-    nanos-as-long → timestamp_micros(ts div 1000); TIMESTAMP_NTZ → cast."""
-    from pyspark.sql.types import TimestampNTZType
-
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(ts_type, TimestampNTZType):
-        # NTZ cast interprets wall-clock in the session TZ; pin UTC so the
-        # instants match the nanos path and DuckDB's naive-as-UTC epoch_us
-        # regardless of the host TZ of a vanilla session.
-        df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

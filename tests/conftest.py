@@ -1,10 +1,10 @@
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+from spark_cherry_shuffle_service_spark.plans.differential import duck_connection
 from spark_cherry_shuffle_service_spark.session import get_spark
-from spark_cherry_shuffle_service_spark.sources.catalog import TABLES, release_persisted
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -120,13 +120,6 @@ def spark():
     s = get_spark(app_name="cherry-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
-
-
-def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
 
 
 @pytest.fixture(scope="session")

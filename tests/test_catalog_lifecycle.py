@@ -2,7 +2,8 @@
 bpe's merge-table memo hold one entry per table or corpus and replace it
 when the file changes, ensure_view re-registers a shared view name exactly
 when another family took it over, and every module-level memo or size gate
-has a row in SCALE.md's branch and memo ledger. Parquet reads:
+has a row in SCALE.md's branch and memo ledger, and only session.get_spark
+configures a session (no runtime conf.set, four env vars). Parquet reads:
 read_parquet's footer schema and parquet_rows' footer counts equal Spark's
 inference and count(), and view registration launches no Spark job."""
 
@@ -264,6 +265,43 @@ def test_module_state_and_size_gates_have_ledger_rows():
                 if f"`{name}`" not in ledger and f"{rel}:{name}" != "plans/registry.py:REGISTRY"
             ]
     assert (missing, knobs) == ([], [])
+
+
+#: The environment variables the package and bench.py may read: host
+#: sizing (get_spark) and the default fixture and generated-data dirs.
+_ENV_ALLOWLIST = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_GEN_DIR"}
+
+
+def test_session_is_configured_only_by_get_spark():
+    """Source scan of the package and bench.py: no runtime `.conf.set(`
+    (session.get_spark owns every conf), and no environment read outside
+    _ENV_ALLOWLIST. A read whose name is not a literal, or any other use of
+    os.environ / os.getenv, counts as outside."""
+    paths = [os.path.join(r, f) for r, _d, fs in os.walk(_PACKAGE) for f in fs if f.endswith(".py")]
+    conf_sets, env = [], []
+    for path in paths + [os.path.join(os.path.dirname(_PACKAGE), "bench.py")]:
+        with open(path) as fh:
+            src = fh.read()
+        rel = os.path.relpath(path, os.path.dirname(_PACKAGE))
+        if ".conf.set(" in src:
+            conf_sets.append(rel)
+        tree = ast.parse(src)
+        reads = [
+            node.args[0] if isinstance(node, ast.Call) else node.slice
+            for node in ast.walk(tree)
+            if (isinstance(node, ast.Call) and ast.unparse(node.func) in ("os.environ.get", "os.getenv"))
+            or (isinstance(node, ast.Subscript) and ast.unparse(node.value) == "os.environ")
+        ]
+        uses = sum(
+            isinstance(node, ast.Attribute) and ast.unparse(node) in ("os.environ", "os.getenv")
+            for node in ast.walk(tree)
+        )
+        env += [
+            f"{rel}:{ast.unparse(r)}" for r in reads
+            if not (isinstance(r, ast.Constant) and r.value in _ENV_ALLOWLIST)
+        ]
+        env += [f"{rel}:os.environ"] * (uses - len(reads))
+    assert (conf_sets, env) == ([], [])
 
 
 _PARITY_CASES = (

@@ -667,8 +667,8 @@ def test_arrow_python_stage_survives_executor_sigkill(duck_smoke):
 
 
 # Off-heap Tungsten parity (VERDICT r7 item 6): the reference deploys with
-# spark.memory.offHeap.enabled/size (conf/spark-defaults.conf:44-45);
-# session.py mirrors it behind SPARK_GRAFT_OFFHEAP. The conf only takes
+# spark.memory.offHeap.enabled/size (conf/spark-defaults.conf:44-45); a
+# deployment passes them through get_spark's extra_conf. The conf only takes
 # effect at JVM launch, so the demo runs in a subprocess: assert the confs
 # landed AND a real shuffle query returns the exact oracle result with
 # off-heap memory on.
@@ -679,7 +679,10 @@ from spark_cherry_shuffle_service_spark.session import get_spark
 from spark_cherry_shuffle_service_spark.plans.registry import all_specs
 
 sf_dir = sys.argv[1]
-spark = get_spark(app_name="offheap-smoke")
+spark = get_spark(
+    app_name="offheap-smoke",
+    extra_conf={"spark.memory.offHeap.enabled": "true", "spark.memory.offHeap.size": "512m"},
+)
 out = {
     "offheap_enabled": spark.conf.get("spark.memory.offHeap.enabled", "false"),
     "offheap_size": spark.conf.get("spark.memory.offHeap.size", "0"),
@@ -694,7 +697,6 @@ print(json.dumps(out))
 def test_offheap_conf_runs_green(duck_smoke):
     env = dict(os.environ)
     env["PYTHONPATH"] = "/root/repo" + os.pathsep + env.get("PYTHONPATH", "")
-    env["SPARK_GRAFT_OFFHEAP"] = "512m"
     env["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     proc = subprocess.run(
         [sys.executable, "-c", _OFFHEAP_CHILD, SF_SMOKE],

@@ -22,6 +22,7 @@ import pytest
 
 from spark_cherry_shuffle_service_spark.plans.differential import (
     compare_queries,
+    duck_connection,
     duck_rows,
     py_oracle_rows,
 )
@@ -30,7 +31,7 @@ from spark_cherry_shuffle_service_spark.plans.registry import (
     QuerySpec,
     all_specs,
 )
-from tests.conftest import SF_CORRECT, duck_connection
+from tests.conftest import SF_CORRECT
 
 SF_01 = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")
 

@@ -15,6 +15,36 @@ from spark_cherry_shuffle_service_spark.streaming.streams import (
 from tests.conftest import SF_SMOKE
 
 
+def test_nanos_events_decode_like_micros(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file decodes, in batch (catalog.table) and
+    streaming (events_file_schema + normalize_ts) reads, to the same
+    TimestampType instants as the µs fixture."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampType
+
+    from spark_cherry_shuffle_service_spark.streaming import events_file_schema
+
+    nanos_dir = tmp_path / "nanos"
+    nanos_dir.mkdir()
+    src = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    i = src.schema.get_field_index("ts")
+    pq.write_table(src.set_column(i, "ts", src["ts"].cast(pa.timestamp("ns"))), nanos_dir / "events.parquet")
+    assert "nanoseconds" in str(pq.read_metadata(nanos_dir / "events.parquet").schema.column(i).logical_type)
+    # the nanos-as-long branch of normalize_ts is the one under test
+    assert events_file_schema(spark, str(nanos_dir / "events.parquet"))["ts"].dataType == LongType()
+
+    def rows(df):
+        return sorted(map(tuple, df.select("event_id", "ts").collect()))
+
+    want = rows(table(spark, SF_SMOKE, "events"))
+    batch = table(spark, str(nanos_dir), "events")
+    assert isinstance(batch.schema["ts"].dataType, TimestampType)
+    assert rows(batch) == want
+    stream = read_events_stream(spark, str(nanos_dir))
+    assert rows(run_to_memory(stream.select("event_id", "ts"), "nanos_events", mode="append")) == want
+
+
 def test_windowed_counts_stream_matches_batch(spark):
     stream = windowed_counts_stream(read_events_stream(spark, SF_SMOKE))
     got = {

@@ -33,7 +33,9 @@ def _default_parallelism() -> int:
 
 def _default_driver_memory() -> str:
     """Half the host's physical memory, capped at 16g: the local[] JVM
-    shares the host with the Python workers and the DuckDB oracle."""
+    shares the host with the Python workers and the DuckDB oracle. A
+    container's memory limit is not read; under a limit below the host's
+    memory, set SPARK_GRAFT_DRIVER_MEM."""
     half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // (1 << 20)
     return f"{min(half_mb, 16 << 10)}m"
 
@@ -45,12 +47,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config.
 
-    This is the only code that configures a session. The package's readers
-    and generators expect a session built here: they rely on its UTC
-    session time zone and on `spark.sql.legacy.parquet.nanosAsLong`, and set
-    no conf themselves. Cluster confs (external shuffle service, dynamic
-    allocation, off-heap memory) go through `extra_conf` or
-    spark-defaults.conf, as the reference deploys them
+    This is the only code that configures a session, with one exception:
+    the events read (catalog.read_events_file) sets the UTC session time
+    zone and `spark.sql.legacy.parquet.nanosAsLong` itself, because
+    `__spark_entry__` callers read events through a session of their own.
+    The package's generators expect a session built here. Cluster confs
+    (external shuffle service, dynamic allocation, off-heap memory) go
+    through `extra_conf` or spark-defaults.conf, as the reference deploys them
     (conf/spark-defaults.conf:44-45). `getOrCreate` applies the runtime SQL
     confs to a live session too; JVM-launch confs (heap, master) take effect
     only in a new one.
@@ -70,17 +73,18 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Join planning parity: TPCDSQueryBenchmark.scala:57-58.
         .config("spark.sql.autoBroadcastJoinThreshold", str(20 * 1024 * 1024))
-        # Deterministic cross-engine comparison (DuckDB oracle): the events
-        # `ts` decode (catalog.normalize_ts) and the generators' NTZ casts
-        # read naive wall-clock values as UTC instants.
+        # Deterministic cross-engine comparison (DuckDB oracle): the
+        # generators' NTZ casts read naive wall-clock values as UTC instants
+        # (the events read, catalog.read_events_file, sets it again).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Arrow for the few pandas-UDF operators (multimodal, streaming state).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.ts has shipped as TIMESTAMP(NANOS) (round-1 fixtures) and
         # timestamp[us] (round-2 regeneration); this conf makes the NANOS
-        # form readable and is a no-op for µs files. The catalog branches
-        # on the actual dtype (sources/catalog.py::normalize_ts).
+        # form readable and is a no-op for µs files (the events read sets
+        # it again). The catalog branches on the actual dtype
+        # (sources/catalog.py::normalize_ts).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Straggler mitigation: the Cherry paper's motivation is reduce-task
         # stalls on slow shuffle reads; on a real cluster speculative

@@ -146,13 +146,28 @@ def parquet_rows(path: str) -> int:
     return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
 
 
+def read_events_file(spark: SparkSession, path: str) -> DataFrame:
+    """The physical (undecoded) read of an events parquet file or dir, for
+    batch and streaming reads alike; `normalize_ts` decodes its `ts`.
+
+    The one runtime conf write in the package. `__spark_entry__` callers
+    read events through a session of their own, not one built by
+    get_spark, so the decode sets the two confs it depends on here:
+    `nanosAsLong` makes a TIMESTAMP(NANOS) file readable (as long; a no-op
+    for µs files), and a UTC session time zone makes the NTZ cast, and
+    every date and window function downstream, read the naive wall clock
+    as a UTC instant, like DuckDB's oracle, on a host in any time zone.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return read_parquet(spark, path)
+
+
 def normalize_ts(df: DataFrame) -> DataFrame:
-    """Decode any physical events `ts` encoding to session-TZ TimestampType,
-    for batch and streaming reads alike: nanos-as-long →
-    timestamp_micros(ts div 1000), lossless as the fixture has no sub-µs;
-    TIMESTAMP_NTZ → cast, which reads the wall clock in the session time
-    zone (UTC under get_spark: naive-as-UTC, like DuckDB's epoch_us and the
-    nanos path); TIMESTAMP as is."""
+    """Decode any physical events `ts` encoding to session-TZ TimestampType:
+    nanos-as-long → timestamp_micros(ts div 1000), lossless as the fixture
+    has no sub-µs; TIMESTAMP_NTZ → cast, naive-as-UTC under the UTC session
+    time zone `read_events_file` sets; TIMESTAMP as is."""
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -162,8 +177,8 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    return normalize_ts(df) if name == "events" else df
+    path = f"{sf_dir}/{name}.parquet"
+    return normalize_ts(read_events_file(spark, path)) if name == "events" else read_parquet(spark, path)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

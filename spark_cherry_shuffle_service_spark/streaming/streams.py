@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from spark_cherry_shuffle_service_spark.sources.catalog import normalize_ts, read_parquet
+from spark_cherry_shuffle_service_spark.sources.catalog import normalize_ts, read_events_file, read_parquet
 
 #: Logical (post-normalization) events schema: what every downstream
 #: operator sees after `normalize_ts`, regardless of the file's physical
@@ -58,7 +58,7 @@ def events_file_schema(spark: SparkSession, path: str) -> StructType:
     read of the footer (streaming reads require an explicit schema, and it
     must match the file — schema-on-read, never hardcoded: the fixture's
     `ts` physical type has drifted across driver regenerations)."""
-    return read_parquet(spark, path).schema
+    return read_events_file(spark, path).schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,9 +3,10 @@ bpe's merge-table memo hold one entry per table or corpus and replace it
 when the file changes, ensure_view re-registers a shared view name exactly
 when another family took it over, and every module-level memo or size gate
 has a row in SCALE.md's branch and memo ledger, and only session.get_spark
-configures a session (no runtime conf.set, four env vars). Parquet reads:
-read_parquet's footer schema and parquet_rows' footer counts equal Spark's
-inference and count(), and view registration launches no Spark job."""
+configures a session (no runtime conf.set but the events read's two, four
+env vars). Parquet reads: read_parquet's footer schema and parquet_rows'
+footer counts equal Spark's inference and count(), and view registration
+launches no Spark job."""
 
 from __future__ import annotations
 
@@ -272,19 +273,28 @@ def test_module_state_and_size_gates_have_ledger_rows():
 _ENV_ALLOWLIST = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_GEN_DIR"}
 
 
+#: The package's only runtime conf writes: the events read sets the two
+#: confs its `ts` decode depends on, for a session get_spark did not build.
+_CATALOG_PY = "spark_cherry_shuffle_service_spark/sources/catalog.py"
+_EVENTS_CONF_SETS = [
+    (_CATALOG_PY, 'spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")'),
+    (_CATALOG_PY, 'spark.conf.set("spark.sql.session.timeZone", "UTC")'),
+]
+
+
 def test_session_is_configured_only_by_get_spark():
     """Source scan of the package and bench.py: no runtime `.conf.set(`
-    (session.get_spark owns every conf), and no environment read outside
-    _ENV_ALLOWLIST. A read whose name is not a literal, or any other use of
-    os.environ / os.getenv, counts as outside."""
+    but catalog.read_events_file's two (session.get_spark owns every other
+    conf), and no environment read outside _ENV_ALLOWLIST. A read whose
+    name is not a literal, or any other use of os.environ / os.getenv,
+    counts as outside."""
     paths = [os.path.join(r, f) for r, _d, fs in os.walk(_PACKAGE) for f in fs if f.endswith(".py")]
     conf_sets, env = [], []
     for path in paths + [os.path.join(os.path.dirname(_PACKAGE), "bench.py")]:
         with open(path) as fh:
             src = fh.read()
         rel = os.path.relpath(path, os.path.dirname(_PACKAGE))
-        if ".conf.set(" in src:
-            conf_sets.append(rel)
+        conf_sets += [(rel, ln.strip()) for ln in src.splitlines() if ".conf.set(" in ln]
         tree = ast.parse(src)
         reads = [
             node.args[0] if isinstance(node, ast.Call) else node.slice
@@ -301,7 +311,7 @@ def test_session_is_configured_only_by_get_spark():
             if not (isinstance(r, ast.Constant) and r.value in _ENV_ALLOWLIST)
         ]
         env += [f"{rel}:os.environ"] * (uses - len(reads))
-    assert (conf_sets, env) == ([], [])
+    assert (conf_sets, env) == (_EVENTS_CONF_SETS, [])
 
 
 _PARITY_CASES = (

@@ -3,6 +3,8 @@ hash-match DuckDB on sf0.01 (the driver's t2 scale factor)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from spark_cherry_shuffle_service_spark.plans.differential import assert_matches_oracle
@@ -17,6 +19,28 @@ PY_ONLY_NAMES = sorted(
 ROWS_ONLY_NAMES = sorted(
     n for n, s in SPECS.items() if s.oracle is None and s.oracle_py is None
 )
+
+
+#: The DuckDB release the oracle SQL is verified on. `AS MATERIALIZED`
+#: CTEs (operators/dedup.py) parse on it; older releases reject them.
+ORACLE_DUCKDB = (1, 0, 0)
+
+
+def test_oracles_parse_on_the_verified_duckdb():
+    """The installed DuckDB is at least ORACLE_DUCKDB and parses every SQL
+    oracle, so an older oracle engine fails here by name instead of
+    inside the oracles that use its newer syntax."""
+    import duckdb
+
+    assert tuple(map(int, re.findall(r"\d+", duckdb.__version__)[:3])) >= ORACLE_DUCKDB, duckdb.__version__
+    con = duckdb.connect()
+    unparsed = []
+    for name in ORACLE_NAMES:
+        try:
+            con.extract_statements(SPECS[name].oracle)
+        except duckdb.Error:
+            unparsed.append(name)
+    assert unparsed == []
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)

@@ -3,10 +3,15 @@ twins (operators/events_ops.py) over the same fixture."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from spark_cherry_shuffle_service_spark.sources.catalog import table
 from spark_cherry_shuffle_service_spark.streaming.streams import (
+    events_file_schema,
     read_events_stream,
     run_to_memory,
     sessionize_stream,
@@ -15,34 +20,52 @@ from spark_cherry_shuffle_service_spark.streaming.streams import (
 from tests.conftest import SF_SMOKE
 
 
-def test_nanos_events_decode_like_micros(spark, tmp_path):
-    """A TIMESTAMP(NANOS) events file decodes, in batch (catalog.table) and
-    streaming (events_file_schema + normalize_ts) reads, to the same
-    TimestampType instants as the µs fixture."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import LongType, TimestampType
-
-    from spark_cherry_shuffle_service_spark.streaming import events_file_schema
-
-    nanos_dir = tmp_path / "nanos"
-    nanos_dir.mkdir()
+@pytest.mark.parametrize(
+    "unit, tz, file_type",
+    [("ns", None, LongType()), ("us", None, TimestampNTZType()), ("us", "UTC", TimestampType())],
+    ids=["nanos", "ntz", "utc"],
+)
+def test_events_decode_in_a_session_get_spark_did_not_configure(spark, tmp_path, unit, tz, file_type):
+    """Each physical events `ts` form (TIMESTAMP(NANOS), TIMESTAMP_NTZ,
+    TIMESTAMP) decodes, in batch (catalog.table) and streaming
+    (events_file_schema + normalize_ts) reads, to the fixture's instants,
+    naive wall clock read as UTC, also in a session with `nanosAsLong`
+    unset and a non-UTC time zone: the session a caller of
+    `__spark_entry__` brings."""
     src = pq.read_table(f"{SF_SMOKE}/events.parquet")
     i = src.schema.get_field_index("ts")
-    pq.write_table(src.set_column(i, "ts", src["ts"].cast(pa.timestamp("ns"))), nanos_dir / "events.parquet")
-    assert "nanoseconds" in str(pq.read_metadata(nanos_dir / "events.parquet").schema.column(i).logical_type)
-    # the nanos-as-long branch of normalize_ts is the one under test
-    assert events_file_schema(spark, str(nanos_dir / "events.parquet"))["ts"].dataType == LongType()
+    copy = tmp_path / "events.parquet"
+    pq.write_table(src.set_column(i, "ts", src["ts"].cast(pa.timestamp(unit, tz))), copy)
+    # the fixture's naive µs values as UTC epoch micros
+    want = sorted(zip(src["event_id"].to_pylist(), src["ts"].cast(pa.int64()).to_pylist()))
 
     def rows(df):
-        return sorted(map(tuple, df.select("event_id", "ts").collect()))
+        return sorted(map(tuple, df.select("event_id", F.unix_micros("ts")).collect()))
 
-    want = rows(table(spark, SF_SMOKE, "events"))
-    batch = table(spark, str(nanos_dir), "events")
-    assert isinstance(batch.schema["ts"].dataType, TimestampType)
-    assert rows(batch) == want
-    stream = read_events_stream(spark, str(nanos_dir))
-    assert rows(run_to_memory(stream.select("event_id", "ts"), "nanos_events", mode="append")) == want
+    confs = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone")
+    saved = [spark.conf.get(k) for k in confs]
+
+    def foreign_session():
+        spark.conf.unset(confs[0])
+        spark.conf.set(confs[1], "America/Los_Angeles")
+
+    try:
+        foreign_session()
+        batch = table(spark, str(tmp_path), "events")
+        assert spark.conf.get(confs[1]) == "UTC"
+        assert isinstance(batch.schema["ts"].dataType, TimestampType)
+        assert rows(batch) == want
+        # date functions downstream of the read see UTC days too
+        days = batch.select("event_id", F.datediff(F.to_date("ts"), F.lit("1970-01-01")))
+        assert sorted(map(tuple, days.collect())) == [(e, us // 86_400_000_000) for e, us in want]
+        foreign_session()
+        assert events_file_schema(spark, str(copy))["ts"].dataType == file_type
+        foreign_session()
+        stream = read_events_stream(spark, str(tmp_path))
+        assert rows(run_to_memory(stream.select("event_id", "ts"), f"events_{unit}_{tz}", mode="append")) == want
+    finally:
+        for k, v in zip(confs, saved):
+            spark.conf.set(k, v)
 
 
 def test_windowed_counts_stream_matches_batch(spark):

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import statistics
 import sys
 import time
 
@@ -162,44 +161,15 @@ def cmd_explain(args) -> int:
 
 
 def cmd_bench(args) -> int:
-    """bench.py's protocol on any query subset: engine warm-up, the
-    calibration probe, then plans/measure.py's loop per query (each run
-    rebuilds the query and writes it to the noop sink; runs[0] is cold,
-    later runs re-hit the query's own pinned frames), so the medians are
-    directly comparable to BASELINE_QUERIES.json. Prints one JSON line with each
-    run's total and its plan-construction share. A single-query A/B is
-    `bench --queries X --runs 5` in a fresh process per code variant."""
-    from spark_cherry_shuffle_service_spark.plans.measure import (
-        calibration_probe,
-        measure_query,
-        warm_up,
-    )
-    from spark_cherry_shuffle_service_spark.plans.registry import all_specs
+    """bench.py's protocol (plans/measure.py::bench) on any query subset,
+    HEADLINE by default. Prints one JSON line with the per-run `details`
+    inline. A single-query A/B is `bench --queries X --runs 5` in a fresh
+    process per code variant."""
+    from spark_cherry_shuffle_service_spark.plans.measure import HEADLINE, bench
 
     spark = _spark(args)
-    names = [_resolve(n) for n in args.queries.split(",")] if args.queries else sorted(
-        n for n, s in all_specs().items() if s.oracle is not None
-    )
-    warm_up(spark, args.sf_dir)
-    calibration = min(calibration_probe(spark))
-    timings, runs, build_s = {}, {}, {}
-    for name in names:
-        m = measure_query(spark, name, args.sf_dir, max(1, args.runs))
-        runs[name] = [round(r, 3) for r in m.runs]
-        build_s[name] = [round(b, 3) for b in m.build_s]
-        timings[name] = round(statistics.median(runs[name]), 3)
-    print(
-        json.dumps(
-            {
-                "protocol": {"runs_per_query": max(1, args.runs), "stat": "median"},
-                "queries": timings,
-                "runs": runs,
-                "build_s": build_s,
-                "total": round(sum(timings.values()), 3),
-                "calibration_sec": calibration,
-            }
-        )
-    )
+    names = [_resolve(n) for n in args.queries.split(",")] if args.queries else HEADLINE
+    print(json.dumps(bench(spark, names, args.sf_dir, max(1, args.runs))))
     return 0
 
 

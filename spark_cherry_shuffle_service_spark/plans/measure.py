@@ -1,8 +1,12 @@
 """One measurement loop for registered queries.
 
-Every per-query timer calls `measure_query` (bench.py, the CLI's `bench`
-and `shufflestats`). Each run rebuilds the query and forces it through the
-noop sink, the reference's protocol (TPCDSQueryBenchmark.scala:100
+`bench` is the one timing protocol: bench.py and the CLI's `bench` both
+call it. It warms the engine up, reads the calibration probe, then runs
+`measure_query` once per query and reports the median of that query's runs
+(the reference reports one statistic of numIters runs for every query,
+TPCDSQueryBenchmark.scala:88-100). `shufflestats` calls `measure_query`
+directly. Each run rebuilds the query and forces it through the noop sink,
+the reference's protocol (TPCDSQueryBenchmark.scala:100
 `spark.sql(q).noop()`), timing plan construction and execution
 separately. After the runs, outside the timed region, the stages the query
 launched are summed from Spark's in-process status store: the data the
@@ -14,6 +18,8 @@ pinned frames.
 
 from __future__ import annotations
 
+import statistics
+import sys
 import time
 from dataclasses import dataclass
 
@@ -239,11 +245,11 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
 
 def calibration_probe(spark: SparkSession) -> list[float]:
     """Three readings of a fixed, code-independent job (generator + md5 +
-    small shuffle); report their MIN. Its value moves only with host
-    state, so total/calibration compares across host windows where raw
-    totals do not (BENCH_AB_HOSTDRIFT). Min, because probe noise is
-    one-sided and BASELINE_QUERIES.json's calibration_sec pins the
-    baseline window's fastest reading (ADVICE r8)."""
+    small shuffle); `bench` reports their MIN. Its value moves only with
+    host state and core count (the job has a fixed 32 partitions), so
+    total/calibration compares across host windows of equal core count
+    where raw totals do not (BENCH_AB_HOSTDRIFT). Min, because probe noise
+    is one-sided (ADVICE r8)."""
 
     def once() -> float:
         t0 = time.perf_counter()
@@ -312,3 +318,37 @@ def measure_query(spark: SparkSession, name: str, sf_dir: str, runs: int) -> Mea
     finally:
         release_persisted()
     return Measurement(build_s, exec_s, **totals)
+
+
+def bench(spark: SparkSession, names: list[str], sf_dir: str, runs: int) -> dict:
+    """Warm up, read the calibration probe, then time each query `runs`
+    times with `measure_query`. Each query's number is the median of its
+    runs; `value` is the sum of the medians. `executor_cpu_s` (summed stage
+    CPU, which drifts less with host load than wall clock) and `cores` sit
+    next to the calibration: two readings compare only at equal `cores`."""
+    warm_up(spark, sf_dir)
+    probes = calibration_probe(spark)
+    print(f"  [calibration: {min(probes):.3f}s]", file=sys.stderr)
+    queries: dict[str, float] = {}
+    details: dict[str, dict] = {}
+    for name in names:
+        m = measure_query(spark, name, sf_dir, runs)
+        times = [round(r, 3) for r in m.runs]
+        queries[name] = round(statistics.median(times), 3)
+        details[name] = {
+            "runs": times,
+            "build_s": [round(b, 3) for b in m.build_s],
+            "executor_cpu_s": round(m.cpu_s, 3),
+        }
+        print(f"  {name}: {queries[name]:.3f}s", file=sys.stderr)
+    return {
+        "queries": queries,
+        "details": details,
+        "protocol": {"runs_per_query": runs, "stat": "median"},
+        "calibration_sec": min(probes),
+        "calibration_probes": probes,
+        "calibration_stat": "min",
+        "cores": spark.sparkContext.defaultParallelism,
+        "executor_cpu_s": round(sum(d["executor_cpu_s"] for d in details.values()), 3),
+        "value": round(sum(queries.values()), 3),
+    }

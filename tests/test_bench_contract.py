@@ -49,9 +49,9 @@ def test_entry_module_contract(spark):
 
 
 def test_baseline_queries_file_matches_headline():
-    """BASELINE_QUERIES.json (the canonical per-query table bench.py uses
-    for its in-run stall re-time) must cover exactly the HEADLINE set with
-    positive timings."""
+    """BASELINE_QUERIES.json (BASELINE.md's canonical per-query sf0.1
+    table, and the denominators of the sf1 scaling check below) must cover
+    exactly the HEADLINE set with positive timings."""
     import json
 
     with open("/root/repo/BASELINE_QUERIES.json") as fh:
@@ -62,50 +62,6 @@ def test_baseline_queries_file_matches_headline():
         "and refresh BASELINE_QUERIES.json after changing HEADLINE"
     )
     assert all(v > 0 for v in base.values())
-
-
-def test_calibration_normalized_gate_absorbs_uniform_slowdown():
-    """VERDICT r7 item 2: a uniformly 1.5x-slowed host window (every query
-    1.5x its baseline AND the code-independent calibration probe 1.5x its
-    baseline-epoch value) must yield ZERO violations under the normalized
-    gate — BENCH_r07 carried 4 phantom violations from exactly this class.
-    A real regression (one query 3x while the window is clean) must still
-    flag, and a faster window must never relax the gate below raw."""
-    import json
-
-    from bench import drift_factor, is_violation
-
-    with open("/root/repo/BASELINE_QUERIES.json") as fh:
-        doc = json.load(fh)
-    baselines = {k: float(v) for k, v in doc["queries"].items()}
-    cal_base = float(doc["calibration_sec"])  # the gate requires the epoch probe
-
-    # Uniformly slowed window: zero violations.
-    drift = drift_factor(1.5 * cal_base, cal_base)
-    assert abs(drift - 1.5) < 1e-9
-    slowed = {n: 1.5 * b for n, b in baselines.items()}
-    assert not any(is_violation(t, baselines[n], drift) for n, t in slowed.items())
-    # The real counterfactual (ADVICE r8: the previous form carried a
-    # constant-false `1.5 > 2.0` that made the check vacuous): a 1.5x table
-    # never flags even UN-normalized (2x factor alone absorbs it), while a
-    # 2.5x table at drift 1.0 does flag — that's the phantom class the
-    # normalization exists for, exercised below.
-    assert not any(is_violation(1.5 * b, b, 1.0) for b in baselines.values())
-    worse = {n: 2.5 * b for n, b in baselines.items() if b > 1.0}
-    assert any(is_violation(t, baselines[n], 1.0) for n, t in worse.items())
-    assert not any(is_violation(t, baselines[n], 2.5) for n, t in worse.items())
-
-    # A real regression still flags in a clean window (drift 1.0) and in a
-    # mildly drifted one.
-    name = max(baselines, key=baselines.get)
-    assert is_violation(10 * baselines[name] + 1.0, baselines[name], 1.0)
-    assert is_violation(10 * baselines[name] + 1.0, baselines[name], 1.2)
-
-    # A faster window never tightens below the raw baseline.
-    assert drift_factor(0.5 * cal_base, cal_base) == 1.0
-    # Missing probe values degrade to the raw gate, never crash.
-    assert drift_factor(None, cal_base) == 1.0
-    assert drift_factor(1.0, None) == 1.0
 
 
 def test_sf1_bench_artifact_scales_sublinearly():
@@ -139,27 +95,59 @@ def test_sf1_bench_artifact_scales_sublinearly():
     assert not bad, f"super-linear scaling at 10x data: {bad}"
 
 
-def test_baseline_file_selection_by_sf():
-    """bench.py picks the baseline table by the fixture dir's SF tag
-    (VERDICT r9 item 2): canonical sf0.1 -> BASELINE_QUERIES.json, sf1 ->
-    BASELINE_QUERIES_sf1.json when committed, anything unbaselined ->
-    None (zero baselines beats phantom violations)."""
+def test_only_the_canonical_sf01_dir_is_canonical():
+    """bench.py refreshes BENCH_FULL.json and COLD_BASELINE.json only from
+    the canonical sf0.1 fixtures, keyed on the RESOLVED path: a generated
+    .genscale/sf0.1 shares the basename but not the data (ADVICE r10)."""
     import os
 
-    from bench import BASELINE_FILE, baseline_file_for
+    from bench import _REPO, CANONICAL_SF01, _is_canonical_sf01
 
-    assert baseline_file_for("/root/testdata/sf0.1") == BASELINE_FILE
-    assert baseline_file_for("/root/testdata/sf0.1/") == BASELINE_FILE
-    sf1 = baseline_file_for("/root/repo/.genscale/sf1")
-    if os.path.exists("/root/repo/BASELINE_QUERIES_sf1.json"):
-        assert sf1 == "/root/repo/BASELINE_QUERIES_sf1.json"
-    else:
-        assert sf1 is None
-    assert baseline_file_for("/tmp/nonexistent/sf42") is None
-    # ADVICE r10: a GENERATED sf0.1 shares the basename but not the data —
-    # it must not inherit the canonical table (nor, in main(), refresh
-    # COLD_BASELINE.json; the resolved-path check covers both call sites).
-    assert baseline_file_for("/root/repo/.genscale/sf0.1") is None
+    assert _is_canonical_sf01(CANONICAL_SF01)
+    assert _is_canonical_sf01(CANONICAL_SF01 + "/")
+    assert not _is_canonical_sf01(os.path.join(_REPO, ".genscale", "sf0.1"))
+    assert not _is_canonical_sf01(os.path.join(_REPO, "nonexistent", "sf42"))
+
+
+def test_bench_main_prints_one_line_and_writes_only_canonical_artifacts(
+    spark, monkeypatch, tmp_path, capsys
+):
+    """bench.py's stdout contract: exactly one parseable JSON line, the
+    bulky `queries` map first and `sf` last (the driver keeps only the
+    tail of stdout). A non-canonical run writes no file; a canonical one
+    writes BENCH_FULL.json, whose medians are those of its runs, and
+    COLD_BASELINE.json."""
+    import json
+    import statistics
+
+    import bench
+
+    names = ["join_inner", "top_revenue"]
+    monkeypatch.setattr(bench, "HEADLINE", names)
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    monkeypatch.setattr(bench, "DEFAULT_SF_DIR", SF_SMOKE)
+
+    bench.main()
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1, lines
+    rec = json.loads(lines[0])
+    keys = list(rec)
+    assert keys[0] == "queries" and keys[-2:] == ["value", "sf"], keys
+    assert list(rec["queries"]) == names and rec["n_queries"] == 2
+    assert rec["value"] == round(sum(rec["queries"].values()), 3)
+    assert rec["cores"] > 0 and rec["executor_cpu_s"] > 0 and rec["calibration_sec"] > 0
+    assert "details" not in rec
+    assert list(tmp_path.iterdir()) == []
+
+    monkeypatch.setattr(bench, "CANONICAL_SF01", SF_SMOKE)
+    bench.main()
+    capsys.readouterr()
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["BENCH_FULL.json", "COLD_BASELINE.json"]
+    full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
+    for n in names:
+        assert full["queries"][n] == statistics.median(full["details"][n]["runs"])
+    cold = json.loads((tmp_path / "COLD_BASELINE.json").read_text())
+    assert cold["queries"] == {n: full["details"][n]["runs"][0] for n in names}
 
 
 def test_cold_baseline_covers_headline_set():

@@ -56,15 +56,16 @@ def test_cli_bench_subset(spark, capsys):
     # (isolated cold runs read 3-10x the warm-median baselines).
     assert rec["protocol"]["stat"] == "median"
     assert rec["protocol"]["runs_per_query"] == 3
-    assert all(len(runs) == 3 for runs in rec["runs"].values())
+    runs = {n: d["runs"] for n, d in rec["details"].items()}
+    assert set(runs) == set(rec["queries"])
+    assert all(len(r) == 3 for r in runs.values())
     for name, t in rec["queries"].items():
-        assert t == sorted(rec["runs"][name])[1], (name, t, rec["runs"][name])
+        assert t == sorted(runs[name])[1], (name, t, runs[name])
     # One timer (plans/measure.py): each run total includes the query's
     # plan construction, and the query's pinned frames are released.
-    assert set(rec["build_s"]) == set(rec["runs"])
-    for name, builds in rec["build_s"].items():
-        assert len(builds) == 3
-        assert all(0 < b <= r for b, r in zip(builds, rec["runs"][name])), (name, builds)
+    for name, d in rec["details"].items():
+        assert len(d["build_s"]) == 3
+        assert all(0 < b <= r for b, r in zip(d["build_s"], d["runs"])), (name, d)
     assert rec["calibration_sec"] > 0
     assert not catalog._PINNED.get(spark)
 

@@ -59,19 +59,20 @@ def main() -> None:
     # The per-run `details` map is NOT printed at all (VERDICT r11 item 2:
     # BENCH_r10's capture was tail-only and unparseable because details
     # tripled the line); it lives in BENCH_FULL.json.
+    # The committed artifacts describe the canonical sf0.1 run only, so any
+    # other SF leaves them alone and names no `full_copy`. COLD_BASELINE.json
+    # is runs[0] of every headline query: its cold path, nothing pinned yet.
+    canonical = _is_canonical_sf01(sf_dir)
     payload = {
         **run,
         "metric": "headline_query_set_wall_clock",
         "unit": "sec",
         "n_queries": len(run["queries"]),
-        "full_copy": "BENCH_FULL.json",
+        **({"full_copy": "BENCH_FULL.json"} if canonical else {}),
         "value": value,
         "sf": sf,
     }
-    # The committed artifacts describe the canonical sf0.1 run only, so any
-    # other SF leaves them alone. COLD_BASELINE.json is runs[0] of every
-    # headline query: its cold path, nothing pinned yet.
-    if _is_canonical_sf01(sf_dir):
+    if canonical:
         _write("BENCH_FULL.json", json.dumps(dict(payload, details=details)) + "\n")
         cold = {
             "_protocol": "runs[0] of the canonical sf0.1 bench (cold persisted caches)",

@@ -25,7 +25,7 @@ split by AQE. The pairwise-Jaccard query is intentionally blocked by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_cherry_shuffle_service_spark.functions.text import (
@@ -287,7 +287,7 @@ def _min_label_rounds(rounds: int) -> str:
     """`l0 … l{rounds}` CTEs of min-label propagation over a symmetric
     `edges(src, dst)` CTE: l0 labels every node with its own id; each round
     a node takes LEAST(own label, MIN of its neighbours' labels). The SQL
-    kernel of graph.py's connected components and of
+    twin of `_min_relax` for graph.py's connected components and
     dedup_cluster_canonical; labels after round k are deterministic whether
     or not the graph has converged. Each round reads the previous one
     twice, so every round is MATERIALIZED: inlined, DuckDB would evaluate
@@ -305,6 +305,42 @@ def _min_label_rounds(rounds: int) -> str:
     return f""", l0 AS (
       SELECT DISTINCT src AS node, src AS label FROM edges
     ){steps}"""
+
+
+def _min_relax(
+    edges: DataFrame, state: DataFrame, col: str, step: Column | None = None
+) -> DataFrame:
+    """One min-relaxation round: every node of `state(node, col)` keeps the
+    MIN of its own value and `value + step` of each state node with an edge
+    to it in `edges(src, dst[, w])` (`step` may read `w`; None adds
+    nothing). The one Spark round of connected components, near-dup
+    clustering, BFS, SSSP and plans/recovery.py; each caller keeps its own
+    seeds, repartition and per-round pin.
+
+    The state is left-joined to the edges on node == src and read ONCE, so
+    k rounds plan k joins, not 2^k copies of round 0. Each joined row emits
+    (node, own value) and (dst, value + step); a node without out-edges
+    keeps its value (its null-dst row is dropped). With edges partitioned
+    by src and the state by node, the groupBy(node) is the round's one
+    exchange. The state is the hash-join build side: otherwise a left join
+    can only build or broadcast the edges, and at sf0.1 Spark sort-merged
+    the whole edge table every round while the SSSP state was a few seeds
+    (its cold run 5.9 → 6.8 s, BENCH_AB_MINRELAX.json)."""
+    relaxed = F.col(col) if step is None else F.col(col) + step
+    joined = state.hint("shuffle_hash").join(edges, F.col("node") == F.col("src"), "left")
+    cand = joined.select(
+        F.explode(
+            F.array(
+                F.struct("node", col),
+                F.struct(F.col("dst").alias("node"), relaxed.alias(col)),
+            )
+        ).alias("c")
+    )
+    return (
+        cand.filter(F.col("c.node").isNotNull())
+        .groupBy(F.col("c.node").alias("node"))
+        .agg(F.min(f"c.{col}").alias(col))
+    )
 
 
 def _cluster_oracle() -> str:
@@ -343,28 +379,17 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle cache (fresh-process 9.6 s → 8.5 s at sf0.1; 6.0 s warm in
     # the bench where the shared minhash subtree is already cached).
     pairs = _minhash_pair_frame(spark, sf_dir).transform(pin)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    edges = (
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        .transform(pin)  # re-joined every propagation round
     )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    # r11 opt (guide §2.4): each round previously ran TWO joins (neighbor
-    # min, then join-back for LEAST(own, nmin)) — ~5 exchanges/round on a
-    # label table that is tiny relative to the corpus. Adding a self-loop
-    # per node makes min-over-(neighbors ∪ self) equal LEAST(own label,
-    # neighbor min), so one join + one partial-agg'd groupBy per round
-    # computes the identical round-k labels.
-    edges_plus = edges.unionByName(
-        nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).transform(pin)  # re-joined every propagation round
-    labels = nodes.select("node", F.col("node").alias("label"))
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
     for _ in range(_CLUSTER_ROUNDS):
-        labels = (
-            edges_plus.join(labels, edges_plus.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("src").alias("node"), "label")
-            .transform(pin)  # per-round persist: avoids O(k²) recompute (graph.py note)
-        )
+        # per-round persist: avoids O(k²) recompute (graph.py note)
+        labels = _min_relax(edges, labels, "label").transform(pin)
     w = Window.partitionBy("label")
     return labels.select(
         F.col("node").alias("doc_id"),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_cherry_shuffle_service_spark.operators.dedup import _min_label_rounds
+from spark_cherry_shuffle_service_spark.operators.dedup import _min_label_rounds, _min_relax
 from spark_cherry_shuffle_service_spark.plans.registry import query
 from spark_cherry_shuffle_service_spark.sources.catalog import pin, table
 
@@ -315,9 +315,9 @@ def _cc_oracle_py(con, sf_dir: str):
 # ---------------------------------------------------------------------------
 # Connected components via k rounds of min-label propagation over the same
 # trade graph — the other canonical iterative graph workload (GraphX's
-# ConnectedComponents does exactly this under Pregel). Each round: every
-# node takes the min of its own and its neighbors' labels — one join + one
-# groupBy per round, same partitioning story as PageRank above.
+# ConnectedComponents does exactly this under Pregel). Each round is one
+# `_min_relax` (dedup.py): every node takes the min of its own and its
+# neighbors' labels — one join + one groupBy per round.
 # ---------------------------------------------------------------------------
 @query(
     "graph_connected_components",
@@ -327,32 +327,20 @@ def _cc_oracle_py(con, sf_dir: str):
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
-    # Partition edges by DST — the key every per-round join probes — and
-    # labels by node: with equal partition counts the round's
-    # edges⋈labels join reuses both sides' partitioning (no exchange),
-    # the groupBy(src) is the round's ONE shuffle, and the label-update
-    # join (node == src) aligns with that shuffle's output. One exchange
-    # per round beats even the old forced-broadcast plan, and the shape
-    # is exactly what src/dst-bucketed edge tables give at 100 TB.
-    edges = _sym_edges(_trade_pairs(spark, sf_dir)).repartition(par, "dst").transform(pin)
+    # Edges partitioned by src, the key the round's join probes; the
+    # labels inherit that partitioning through the distinct, so with equal
+    # partition counts the join needs no exchange and the round's
+    # groupBy(node) is its ONE shuffle — the shape src-bucketed edge
+    # tables give at 100 TB.
+    edges = _sym_edges(_trade_pairs(spark, sf_dir)).repartition(par, "src").transform(pin)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .repartition(par, "node")
     )
     for _ in range(_CC_ITER):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src)
-            .select("node", F.least(F.col("label"), F.col("nmin")).alias("label"))
-            # per-round persist: see pagerank note — avoids O(k²) recompute
-            .transform(pin)
-        )
+        # per-round persist: see pagerank note — avoids O(k²) recompute
+        labels = _min_relax(edges, labels, "label").transform(pin)
     return labels.groupBy(F.col("label").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes"), F.min("node").alias("min_node")
     )
@@ -475,12 +463,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bounded BFS: min-hop distance from a seed set, 3 frontier expansions.
-# The per-round shape is the reference's shuffle pattern (join on node id,
-# distinct, anti-join) — the same dataflow its Cherry service accelerates
-# across executor loss. 100 TB: frontier joins probe the src-partitioned
-# (at scale: bucketed) edge table; each round's frontier is persisted so
-# round k never recomputes rounds 1..k-1 (CLAUDE.md iterative rule).
+# Bounded BFS: min-hop distance from a seed set, 3 rounds. Each round is
+# one `_min_relax` (dedup.py) with step 1: a node reached at hop h offers
+# h + 1 to its neighbors, so after k rounds the state holds every node
+# within k hops at its min hop count. 100 TB: the round's join probes the
+# src-partitioned (at scale: bucketed) edge table; each round's state is
+# persisted so round k never recomputes rounds 1..k-1 (CLAUDE.md
+# iterative rule).
 # ---------------------------------------------------------------------------
 _BFS_HOPS = 3
 
@@ -519,39 +508,27 @@ def _bfs_oracle() -> str:
 )
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nodes reachable at each min-hop distance (0..3) from the nation-0
-    supplier seed set, over the supplier<->customer trade graph."""
+    supplier seed set, over the supplier<->customer trade graph; a hop no
+    node reaches reads 0."""
     par = spark.sparkContext.defaultParallelism
     edges = _sym_edges(_trade_pairs(spark, sf_dir)).repartition(par, "src").transform(pin)
-    sup = table(spark, sf_dir, "supplier")
-    frontier = (
-        sup.filter(F.col("s_nationkey") == 0)
+    hops = (
+        table(spark, sf_dir, "supplier")
+        .filter(F.col("s_nationkey") == 0)
         .select((2 * F.col("s_suppkey")).alias("node"))
         .distinct()
-        .transform(pin)
+        .select("node", F.lit(0).alias("hop"))
     )
-    visited = frontier
-    counts = [
-        frontier.agg(F.count(F.lit(1)).alias("n_nodes")).select(
-            F.lit(0).alias("hop"), "n_nodes"
-        )
-    ]
-    for k in range(1, _BFS_HOPS + 1):
-        nxt = (
-            edges.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = nxt.join(visited, "node", "left_anti").transform(pin)
-        visited = visited.unionByName(frontier)
-        counts.append(
-            frontier.agg(F.count(F.lit(1)).alias("n_nodes")).select(
-                F.lit(k).alias("hop"), "n_nodes"
-            )
-        )
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    return out.select(F.col("hop").cast("int").alias("hop"), F.col("n_nodes").cast("bigint").alias("n_nodes")).orderBy("hop")
+    for _ in range(_BFS_HOPS):
+        hops = _min_relax(edges, hops, "hop", F.lit(1)).transform(pin)
+    counts = hops.groupBy("hop").agg(F.count(F.lit(1)).alias("n_nodes"))
+    return (
+        spark.range(_BFS_HOPS + 1)
+        .select(F.col("id").cast("int").alias("hop"))
+        .join(counts, "hop", "left")
+        .select("hop", F.coalesce("n_nodes", F.lit(0)).cast("bigint").alias("n_nodes"))
+        .orderBy("hop")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -707,9 +684,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fractional quantity would diverge — DuckDB rounds, Spark truncates —
 # which tests/test_fixtures.py's schema pin would surface). Bounded to
 # _SSSP_ROUNDS relaxations like _CC_ITER/_KCORE_ROUNDS: deterministic at
-# any scale whether or not distances have converged. Per round: one join
-# against the src-partitioned edge table + one min groupBy; per-round
-# persist per the iterative rule. Distances stay tiny integers
+# any scale whether or not distances have converged. Per round: one
+# `_min_relax` (dedup.py) with step w — one join against the
+# src-partitioned edge table + one min groupBy; per-round persist per the
+# iterative rule. Distances stay tiny integers
 # (<= rounds x 50), so min-plus arithmetic can never overflow.
 # ---------------------------------------------------------------------------
 _SSSP_ROUNDS = 4
@@ -792,16 +770,8 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(0).cast("long").alias("dist"))
     )
     for _ in range(_SSSP_ROUNDS):
-        cand = edges.join(dist, edges.src == dist.node).select(
-            F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            # per-round persist: see pagerank note (O(k^2) otherwise)
-            .transform(pin)
-        )
+        # per-round persist: see pagerank note (O(k^2) otherwise)
+        dist = _min_relax(edges, dist, "dist", F.col("w")).transform(pin)
     return dist
 
 

@@ -18,6 +18,7 @@ pinned frames.
 
 from __future__ import annotations
 
+import re
 import statistics
 import sys
 import time
@@ -325,7 +326,13 @@ def bench(spark: SparkSession, names: list[str], sf_dir: str, runs: int) -> dict
     times with `measure_query`. Each query's number is the median of its
     runs; `value` is the sum of the medians. `executor_cpu_s` (summed stage
     CPU, which drifts less with host load than wall clock) and `cores` sit
-    next to the calibration: two readings compare only at equal `cores`."""
+    next to the calibration: two readings compare only at equal `cores`,
+    the task slots of the session's local[N] master (not its partition
+    count, which `-p` sets apart from the cores)."""
+    master = spark.sparkContext.master
+    local = re.fullmatch(r"local\[(\d+)\]", master)
+    if local is None:
+        raise ValueError(f"bench times a local[N] session, not master {master!r}")
     warm_up(spark, sf_dir)
     probes = calibration_probe(spark)
     print(f"  [calibration: {min(probes):.3f}s]", file=sys.stderr)
@@ -348,7 +355,7 @@ def bench(spark: SparkSession, names: list[str], sf_dir: str, runs: int) -> dict
         "calibration_sec": min(probes),
         "calibration_probes": probes,
         "calibration_stat": "min",
-        "cores": spark.sparkContext.defaultParallelism,
+        "cores": int(local.group(1)),
         "executor_cpu_s": round(sum(d["executor_cpu_s"] for d in details.values()), 3),
         "value": round(sum(queries.values()), 3),
     }

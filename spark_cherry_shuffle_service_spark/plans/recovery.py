@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_cherry_shuffle_service_spark.operators.dedup import _min_relax
 from spark_cherry_shuffle_service_spark.sources.catalog import read_parquet
 
 __all__ = ["latest_committed_round", "resumable_min_label_rounds"]
@@ -57,12 +58,13 @@ def resumable_min_label_rounds(
     rounds: int,
     die_after_round: int | None = None,
 ) -> DataFrame:
-    """Run `rounds` rounds of min-label propagation (the connected-components
-    kernel, graph.py:185) with each round's label state committed to
-    `state_dir/round=k` before the next starts. On entry, resumes from the
-    latest committed round — a process killed after round k re-computes only
-    rounds k+1.., never 0..k (the constant-overhead recovery the reference
-    claims for shuffle data; README.md:21).
+    """Run `rounds` rounds of min-label propagation (`_min_relax`, the
+    connected-components round of operators/graph.py) with each round's
+    label state committed to `state_dir/round=k` before the next starts.
+    On entry, resumes from the latest committed round — a process killed
+    after round k re-computes only rounds k+1.., never 0..k (the
+    constant-overhead recovery the reference claims for shuffle data;
+    README.md:21).
 
     `edges` must have columns (src, dst); propagation is symmetric. State
     schema: (node bigint, label bigint), label_0(v) = v.
@@ -89,23 +91,10 @@ def resumable_min_label_rounds(
 
     labels = read_parquet(spark, _round_path(state_dir, start))
     for k in range(start + 1, rounds + 1):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        )
+        labels = _min_relax(sym, labels, "label")
         # Durable commit = the write itself (parquet + _SUCCESS). Reading the
         # committed state back also cuts lineage, so round k+1 plans against
-        # the file, not the k-round shuffle chain (the gotcha in graph.py:
+        # the file, not the k-round shuffle chain (the iterative-loop gotcha:
         # without this, round k recomputes rounds 1..k-1).
         labels.write.mode("overwrite").parquet(_round_path(state_dir, k))
         labels = read_parquet(spark, _round_path(state_dir, k))

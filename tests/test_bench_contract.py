@@ -114,13 +114,15 @@ def test_bench_main_prints_one_line_and_writes_only_canonical_artifacts(
 ):
     """bench.py's stdout contract: exactly one parseable JSON line, the
     bulky `queries` map first and `sf` last (the driver keeps only the
-    tail of stdout). A non-canonical run writes no file; a canonical one
-    writes BENCH_FULL.json, whose medians are those of its runs, and
-    COLD_BASELINE.json."""
+    tail of stdout). A non-canonical run writes no file and names none; a
+    canonical one writes BENCH_FULL.json, whose medians are those of its
+    runs, names it as `full_copy`, and writes COLD_BASELINE.json."""
     import json
     import statistics
 
     import bench
+
+    from spark_cherry_shuffle_service_spark.session import _default_parallelism
 
     names = ["join_inner", "top_revenue"]
     monkeypatch.setattr(bench, "HEADLINE", names)
@@ -135,13 +137,16 @@ def test_bench_main_prints_one_line_and_writes_only_canonical_artifacts(
     assert keys[0] == "queries" and keys[-2:] == ["value", "sf"], keys
     assert list(rec["queries"]) == names and rec["n_queries"] == 2
     assert rec["value"] == round(sum(rec["queries"].values()), 3)
-    assert rec["cores"] > 0 and rec["executor_cpu_s"] > 0 and rec["calibration_sec"] > 0
-    assert "details" not in rec
+    # the session runs 8 partitions on local[SPARK_GRAFT_CPUS]: `cores` is the latter
+    assert rec["cores"] == _default_parallelism()
+    assert rec["executor_cpu_s"] > 0 and rec["calibration_sec"] > 0
+    assert "details" not in rec and "full_copy" not in rec
     assert list(tmp_path.iterdir()) == []
 
     monkeypatch.setattr(bench, "CANONICAL_SF01", SF_SMOKE)
     bench.main()
-    capsys.readouterr()
+    rec = json.loads(capsys.readouterr().out)
+    assert rec["full_copy"] == "BENCH_FULL.json" and list(rec)[-2:] == ["value", "sf"]
     assert sorted(p.name for p in tmp_path.iterdir()) == ["BENCH_FULL.json", "COLD_BASELINE.json"]
     full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
     for n in names:

@@ -26,12 +26,14 @@ from spark_cherry_shuffle_service_spark.plans.differential import (
     duck_rows,
     py_oracle_rows,
 )
+from spark_cherry_shuffle_service_spark.operators import dedup, graph
 from spark_cherry_shuffle_service_spark.plans.registry import (
     REGISTRY,
     QuerySpec,
     all_specs,
 )
-from tests.conftest import SF_CORRECT
+from spark_cherry_shuffle_service_spark.sources.catalog import release_persisted
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 SF_01 = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")
 
@@ -192,3 +194,58 @@ def test_lpa_actually_coarsens(duck_correct):
     _, rows = py_oracle_rows(spec.oracle_py, duck_correct, SF_CORRECT)
     n_nodes_total = sum(r[2][1] for r in rows)  # cols sorted: community, min_node, n_nodes
     assert 0 < len(rows) < n_nodes_total
+
+
+@pytest.mark.parametrize(
+    "name, sf_dir",
+    [
+        ("graph_connected_components", SF_CORRECT),
+        ("dedup_cluster_canonical", SF_CORRECT),
+        ("graph_sssp_bounded", SF_CORRECT),
+        ("graph_bfs_levels", SF_CORRECT),
+        # no nation-0 supplier exists at sf0.001: every hop reads 0
+        ("graph_bfs_levels", SF_SMOKE),
+    ],
+    ids=lambda v: v.rsplit("/", 1)[-1],
+)
+def test_min_relax_callers_match_their_oracles(spark, name, sf_dir):
+    """The `_min_relax` queries agree with their SQL oracles in the
+    default tier, not only in the opt-in full-registry differential."""
+    assert compare_queries(spark, sf_dir, [name])[name] == "match"
+
+
+def _leaves(df) -> int:
+    return df._jdf.queryExecution().logical().collectLeaves().size()
+
+
+#: each `_min_relax` query -> (its module, the constant holding its round count)
+_RELAX_ROUNDS = {
+    "graph_connected_components": (graph, "_CC_ITER"),
+    "dedup_cluster_canonical": (dedup, "_CLUSTER_ROUNDS"),
+    "graph_sssp_bounded": (graph, "_SSSP_ROUNDS"),
+    "graph_bfs_levels": (graph, "_BFS_HOPS"),
+}
+
+
+@pytest.mark.parametrize("name", list(_RELAX_ROUNDS))
+def test_min_relax_plans_grow_linearly_in_rounds(spark, monkeypatch, name):
+    """Each round reads its state once and the edges once, so every round
+    adds exactly the edges' leaves to the built logical plan. A round that
+    reads its state twice doubles the plan per round (connected components
+    built 62 leaves in 4 rounds that way)."""
+    module, rounds_const = _RELAX_ROUNDS[name]
+    real = dedup._min_relax
+    edge_leaves = set()
+
+    def spy(edges, state, col, step=None):
+        edge_leaves.add(_leaves(edges))
+        return real(edges, state, col, step)
+
+    monkeypatch.setattr(module, "_min_relax", spy)
+    plan_leaves = []
+    for rounds in (1, 2, 3):
+        monkeypatch.setattr(module, rounds_const, rounds)
+        plan_leaves.append(_leaves(all_specs()[name].builder(spark, SF_CORRECT)))
+        release_persisted()
+    (per_round,) = edge_leaves
+    assert [b - a for a, b in zip(plan_leaves, plan_leaves[1:])] == [per_round, per_round], plan_leaves

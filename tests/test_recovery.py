@@ -17,11 +17,13 @@ import os
 import subprocess
 import sys
 
+from spark_cherry_shuffle_service_spark.plans import recovery
 from spark_cherry_shuffle_service_spark.plans.recovery import (
     latest_committed_round,
     resumable_min_label_rounds,
 )
 from tests.conftest import SF_SMOKE
+from tests.test_graph import _leaves
 
 ROUNDS = 4
 
@@ -114,3 +116,47 @@ def test_resume_skips_completed_rounds(spark, tmp_path):
     before = os.path.getmtime(marker)
     resumable_min_label_rounds(spark, build_edges(spark), state_dir, rounds=2)
     assert os.path.getmtime(marker) == before, "completed round was rewritten on resume"
+
+
+def _min_labels(edges: list[tuple[int, int]], rounds: int) -> dict[int, int]:
+    """Pure-Python min-label propagation over the symmetric closure of
+    `edges`: label_0(v) = v; each round every node takes the min of its own
+    and its neighbours' previous labels."""
+    nbrs: dict[int, set[int]] = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    label = {v: v for v in nbrs}
+    for _ in range(rounds):
+        label = {v: min([label[v]] + [label[u] for u in nbrs[v]]) for v in nbrs}
+    return label
+
+
+def test_labels_match_a_pure_python_propagation(spark, tmp_path):
+    """The committed round-ROUNDS labels equal an independent min-label
+    computation over the collected edge rows, not only a second run of the
+    same code."""
+    edges = [(r["src"], r["dst"]) for r in build_edges(spark).collect()]
+    got = resumable_min_label_rounds(
+        spark, build_edges(spark), str(tmp_path / "state"), rounds=ROUNDS
+    ).collect()
+    want = _min_labels(edges, ROUNDS)
+    assert sorted((r["node"], r["label"]) for r in got) == sorted(want.items())
+
+
+def test_each_round_reads_its_state_once(spark, monkeypatch, tmp_path):
+    """Every committed round plans the edges plus ONE read of the previous
+    round's committed state, so a round's plan never grows with the round
+    count."""
+    real = recovery._min_relax
+    plans = []
+
+    def spy(edges, state, col, step=None):
+        out = real(edges, state, col, step)
+        plans.append((_leaves(edges), _leaves(state), _leaves(out)))
+        return out
+
+    monkeypatch.setattr(recovery, "_min_relax", spy)
+    resumable_min_label_rounds(spark, build_edges(spark), str(tmp_path / "state"), rounds=3)
+    edge_leaves = plans[0][0]
+    assert plans == [(edge_leaves, 1, edge_leaves + 1)] * 3

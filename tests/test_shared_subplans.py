@@ -2,9 +2,10 @@
 
 The trade graph (operators/graph.py), the co-purchase link pairs
 (operators/pipeline_ml.py), the IVF cell assignment
-(operators/similarity.py) and the MinHash band keys (operators/dedup.py)
-each live in one module-private Spark helper with its oracle twin beside
-it. A pasted copy of one of their defining fragments fails this test."""
+(operators/similarity.py), the MinHash band keys and the min-relaxation
+round (operators/dedup.py) each live in one module-private Spark helper
+with its oracle twin beside it. A pasted copy of one of their defining
+fragments fails this test."""
 
 from __future__ import annotations
 
@@ -23,6 +24,7 @@ _FRAGMENTS = [
     ("_pairs_sql", "graph.py", "2 * l_suppkey AS s_node"),
     ("_trade_nodes", "graph.py", '(2 * F.col("l_suppkey")).alias("s_node")'),
     ("_min_label_rounds", "dedup.py", "LEAST(n.label, MIN(m.label))"),
+    ("_min_relax", "dedup.py", 'join(edges, F.col("node") == F.col("src"), "left")'),
     ("_IVF_ASSIGNED_CTE", "similarity.py", "FROM n CROSS JOIN c "),
     ("_ivf_assigned", "similarity.py", "emb.join(F.broadcast(cents))"),
     ("_band_keys", "dedup.py", "F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))"),
